@@ -20,7 +20,7 @@ import os
 import re
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -540,28 +540,36 @@ def q73_dedup_canonical(spark, sf_dir):
     if 0 < len(d.inputFiles()) < spark.sparkContext.defaultParallelism:
         src = d.repartition(spark.sparkContext.defaultParallelism)
     toks = F.split(F.trim(F.col("text")), r"\s+")
-    sh = (src
-          .select(F.col("doc_id").alias("__id"), toks.alias("__t"))
-          .select("__id", F.array_distinct(F.transform(
-              F.sequence(F.lit(0),
-                         F.greatest(F.size(F.col("__t")) - shingle_k,
-                                    F.lit(0))),
-              lambda i: F.concat_ws(" ", F.slice(F.col("__t"), i + 1,
-                                                 shingle_k))))
-              .alias("__sh")).persist(StorageLevel.MEMORY_AND_DISK))
+    shingled = (src
+                .select(F.col("doc_id").alias("__id"), toks.alias("__t"))
+                .select("__id", F.array_distinct(F.transform(
+                    F.sequence(F.lit(0),
+                               F.greatest(F.size(F.col("__t")) - shingle_k,
+                                          F.lit(0))),
+                    lambda i: F.concat_ws(" ", F.slice(F.col("__t"), i + 1,
+                                                       shingle_k))))
+                    .alias("__sh")))
+    # the signature is cached WITH the shingle sets (a scan-local
+    # array_min fold per universal hash over the once-hashed shingles),
+    # so both band-join sides and the verify joins read one cache; the
+    # empty-set filter sits above the cache so it is not pushed below
+    # the parallelism lift
+    hs = shingled.select(
+        "__id", "__sh",
+        F.transform("__sh", lambda s: F.abs(F.xxhash64(s)) % M31)
+        .alias("__hs"))
 
-    ex = (sh.select("__id", F.explode("__sh").alias("__s"))
-          .select("__id", (F.abs(F.xxhash64("__s")) % M31).alias("__h")))
-    aggs = []
-    for i in range(n_hashes):
-        a = ((i + 1) * 2654435761) % M31
-        b = (i * 40503 + 17) % M31
-        aggs.append(F.min((F.col("__h") * a + b) % M31).alias(f"__mh{i}"))
-    sig = (ex.groupBy("__id").agg(*aggs)
-           .select("__id", F.array(*[f"__mh{i}" for i in range(n_hashes)])
-                   .alias("__sig")))
+    def mixer(a, b):
+        return lambda h: (h * a + b) % M31
 
-    banded = sig.select(
+    sh = hs.select("__id", "__sh", F.array(*[
+        F.array_min(F.transform(
+            "__hs", mixer(((i + 1) * 2654435761) % M31,
+                          (i * 40503 + 17) % M31)))
+        for i in range(n_hashes)]).alias("__sig")).persist(
+            StorageLevel.MEMORY_AND_DISK)
+
+    banded = sh.filter(F.size("__sh") > 0).select(
         "__id",
         F.posexplode(F.array(*[
             F.hash(F.slice("__sig", b * rows_per_band + 1, rows_per_band))
@@ -588,9 +596,10 @@ def q73_dedup_canonical(spark, sf_dir):
                           (inter / union).cast("double").alias("jaccard"))
              .filter(F.col("jaccard") >= thresh))
 
-    edges = pairs.select(F.col("id_a").alias("__a"), F.col("id_b").alias("__b"))
-    sym = edges.union(edges.select(F.col("__b").alias("__a"),
-                                   F.col("__a").alias("__b")))
+    # mirror: both edge directions from one scan of the pairs
+    sym = pairs.select(F.inline(F.array(
+        F.struct(F.col("id_a").alias("__a"), F.col("id_b").alias("__b")),
+        F.struct(F.col("id_b").alias("__a"), F.col("id_a").alias("__b")))))
     # r15 mirror: co-partitioned serialized persist (see
     # connected_components) instead of the eager localCheckpoint
     nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -599,30 +608,27 @@ def q73_dedup_canonical(spark, sf_dir):
     labels = (sym.select(F.col("__a").alias("node")).distinct()
               .withColumn("component", F.col("node")))
 
-    # r15 mirror of the engine's r14 scalar convergence (exact
-    # (count, label-sum) pair instead of a per-round join+isEmpty).
-    # The pre-loop collect also materializes the sym cache before the
-    # first checkpoint, so the checkpointed labels carry accurate
-    # origin stats — same downstream join planning as the engine.
-    def _label_state(frame):
-        row = frame.agg(
-            F.count(F.lit(1)),
-            F.try_sum(F.col("component")
-                      .cast("decimal(38,0)"))).collect()[0]
-        return row[0], row[1]
-
-    prev = _label_state(labels)
+    # mirror of the engine's observed convergence: each round's
+    # checkpoint job counts the nodes whose label decreased, so no
+    # collect runs before or inside the loop.  The sym cache is
+    # therefore first materialized BY round 1's checkpoint, exactly
+    # as in the engine, and every checkpoint carries the same origin
+    # stats — same downstream join planning.
     for _ in range(30):
         neighbor = (sym.join(labels, sym["__a"] == labels["node"])
-                    .select(F.col("__b").alias("node"), "component"))
-        new = (labels.select("node", "component").union(neighbor)
-               .groupBy("node").agg(F.min("component").alias("component")))
-        new = new.localCheckpoint(eager=True)
-        cur = _label_state(new)
-        done = cur == prev and not (cur[0] > 0 and cur[1] is None)
-        prev = cur
-        labels = new
-        if done:
+                    .select(F.col("__b").alias("node"), "component",
+                            F.lit(None).alias("__old")))
+        new = (labels.select("node", "component",
+                             F.col("component").alias("__old"))
+               .union(neighbor)
+               .groupBy("node")
+               .agg(F.min("component").alias("component"),
+                    F.min("__old").alias("__old")))
+        obs = Observation()
+        labels = (new.observe(obs, F.count_if(F.col("component")
+                                              < F.col("__old")).alias("n"))
+                  .select("node", "component").localCheckpoint(eager=True))
+        if obs.get["n"] == 0:
             break
     sym.unpersist()
     losers = labels.filter(F.col("node") != F.col("component")) \

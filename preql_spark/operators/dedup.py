@@ -103,6 +103,32 @@ def minhash_signature(shingles: Column, n_hashes: int = 16) -> Column:
         for i in range(n_hashes)])
 
 
+def _signature_select(shingled: DataFrame, keep: list,
+                      shingle_col: str, n_hashes: int,
+                      portable: bool) -> DataFrame:
+    """The signature projection behind :func:`minhash_signature_df`:
+    ``keep`` columns plus ``__sig``, over every input row (no empty-set
+    filter)."""
+    def base_h(e: Column) -> Column:
+        return (portable_hash(e) if portable
+                else F.abs(F.xxhash64(e))) % _MERSENNE31
+
+    hs = shingled.select(*keep, F.transform(F.col(shingle_col), base_h)
+                         .alias("__hs"))
+
+    def mixer(a: int, b: int):
+        # factory: F.transform requires a 1-arg lambda (a 2-arg
+        # lambda means (element, index) to pyspark)
+        return lambda h: (h * a + b) % _MERSENNE31
+
+    return hs.select(
+        *keep,
+        F.array(*[
+            F.array_min(F.transform(F.col("__hs"),
+                                    mixer(*_universal_params(i))))
+            for i in range(n_hashes)]).alias("__sig"))
+
+
 def minhash_signature_df(shingled: DataFrame, id_col: str = "__id",
                          shingle_col: str = "__sh",
                          n_hashes: int = 16,
@@ -128,25 +154,9 @@ def minhash_signature_df(shingled: DataFrame, id_col: str = "__id",
     ``array_min`` per variant.  Zero shuffles, identical values.
     Docs with empty/NULL shingle arrays drop out exactly as the
     exploded grouping dropped them (no rows to aggregate)."""
-    def base_h(e: Column) -> Column:
-        return (portable_hash(e) if portable
-                else F.abs(F.xxhash64(e))) % _MERSENNE31
-
-    hs = (shingled.filter(F.size(F.col(shingle_col)) > 0)
-          .select(F.col(id_col),
-                  F.transform(F.col(shingle_col), base_h).alias("__hs")))
-
-    def mixer(a: int, b: int):
-        # factory: F.transform requires a 1-arg lambda (a 2-arg
-        # lambda means (element, index) to pyspark)
-        return lambda h: (h * a + b) % _MERSENNE31
-
-    return hs.select(
-        F.col(id_col),
-        F.array(*[
-            F.array_min(F.transform(F.col("__hs"),
-                                    mixer(*_universal_params(i))))
-            for i in range(n_hashes)]).alias("__sig"))
+    return _signature_select(
+        shingled.filter(F.size(F.col(shingle_col)) > 0), [F.col(id_col)],
+        shingle_col, n_hashes, portable)
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str = "text",
@@ -173,19 +183,27 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str = "text",
         raise ValueError(
             f"bands must divide n_hashes, got {n_hashes}/{bands}")
     rows_per_band = n_hashes // bands
-    # shingle sets persisted once — reused for signatures and for the
-    # exact-Jaccard verify of candidates.  Tokenize in a separate
-    # projection (one regex split per doc, not per shingle) and lift
-    # small scans to full parallelism before the CPU-heavy shingling.
-    sh = (ensure_parallelism(df)
-          .select(F.col(id_col).alias("__id"), tokens(text_col).alias("__t"))
-          .select("__id", shingles_from_tokens(F.col("__t"), shingle_k)
-                  .alias("__sh")).persist(_SER_LEVEL))
-    sig = minhash_signature_df(sh, "__id", "__sh", n_hashes, portable=False)
+    # shingle sets AND their signatures persisted once: both sides of
+    # the band self-join and both exact-Jaccard verify joins read this
+    # one cache.  Catalyst does not reuse an exchange across the two
+    # join sides of a lambda-heavy signature plan, so an uncached
+    # signature was recomputed on each side of the band self-join.
+    # Tokenize in a separate projection (one regex split per doc, not
+    # per shingle) and lift small scans to full parallelism before the
+    # CPU-heavy shingling.  Docs with no shingles (NULL text) are
+    # dropped ABOVE the cache: a filter inside it would be pushed
+    # below the parallelism lift and shingle every doc twice.
+    sh = _signature_select(
+        ensure_parallelism(df)
+        .select(F.col(id_col).alias("__id"), tokens(text_col).alias("__t"))
+        .select("__id", shingles_from_tokens(F.col("__t"), shingle_k)
+                .alias("__sh")),
+        ["__id", "__sh"], "__sh", n_hashes, portable=False
+    ).persist(_SER_LEVEL)
 
     # banding frame is NARROW (id, band, bkey) — the shuffle moves a
     # few bytes per row, not the shingle arrays
-    banded = sig.select(
+    banded = sh.filter(F.size("__sh") > 0).select(
         "__id",
         F.posexplode(F.array(*[
             F.hash(F.slice("__sig", b * rows_per_band + 1, rows_per_band))
@@ -305,20 +323,24 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     dup clusters are shallow, so a handful.  Per round: one join + one
     partial-agg shuffle on node; `localCheckpoint` cuts lineage.
 
-    Convergence test (r14, guide §1.2 "don't compute what you throw
-    away"): labels only ever DECREASE, so the round changed something
-    iff the exact label sum dropped.  One scalar aggregate over the
-    just-checkpointed labels replaces the former join + isEmpty
-    action per round (the sum is decimal(38,0) — exact, no int64
-    overflow at any corpus size).  Same labels, same round count,
-    one cheap bounded driver scalar instead of a per-round join.
-    Non-numeric node ids (where a sum is undefined) keep the join
-    test."""
-    from pyspark.sql import types as T
+    Convergence is decided inside each round's own checkpoint job:
+    labels only ever DECREASE, so a round changed something iff some
+    node's label decreased, and an ``Observation`` on the checkpointed
+    frame counts those nodes while the job runs (the aggregate keeps
+    each node's previous label beside its new minimum).  No driver
+    action runs besides the one eager checkpoint per round — the
+    former seed and per-round label-sum collects are gone — and the
+    test needs no sum, so it is exact for any orderable id type
+    (strings and decimal(38,0) included).  Same labels, same round
+    count."""
+    from pyspark.sql import Observation
 
-    edges = pairs.select(F.col(id_a).alias("__a"), F.col(id_b).alias("__b"))
-    sym = edges.union(edges.select(F.col("__b").alias("__a"),
-                                   F.col("__a").alias("__b")))
+    # both edge directions from ONE scan of the (lazy, expensive) pair
+    # plan: a union would run the whole pair pipeline twice
+    a, b = F.col(id_a), F.col(id_b)
+    sym = pairs.select(F.inline(F.array(
+        F.struct(a.alias("__a"), b.alias("__b")),
+        F.struct(b.alias("__a"), a.alias("__b")))))
     # serialized persist co-partitioned by __a, NOT an eager
     # localCheckpoint: the checkpoint's LogicalRDD drops
     # outputPartitioning under AQE, so in the at-scale regime (labels
@@ -326,49 +348,37 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     # pair table; the cached InMemoryTableScan keeps
     # hashpartitioning(__a, nshuf), so each round shuffles only the
     # |nodes| label table.  The operator owns the terminal action
-    # (the convergence collects), so the cache is unpersisted before
+    # (the round checkpoints), so the cache is unpersisted before
     # return.
     nshuf = int(pairs.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "32"))
     sym = sym.repartition(nshuf, "__a").persist(_SER_LEVEL)
     labels = (sym.select(F.col("__a").alias("node")).distinct()
               .withColumn("component", F.col("node")))
-    numeric = isinstance(
-        labels.schema["component"].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-         T.DecimalType))
-
-    def _label_state(frame: DataFrame):
-        # exact (row count, label sum) scalar pair; the count guards
-        # the sum: a NULL sum with rows present is a decimal(38,0)
-        # overflow (possible with DecimalType ids near 10^38 — int64
-        # ids cannot overflow it at any corpus size), and equality of
-        # two overflow-NULLs proves nothing, so convergence is only
-        # declared on a non-NULL sum (or an empty frame).  (r15,
-        # ADVICE r14 — same guard as shortest_paths.)
-        row = frame.agg(
-            F.count(F.lit(1)),
-            F.try_sum(F.col("component")
-                      .cast("decimal(38,0)"))).collect()[0]
-        return row[0], row[1]
-
-    prev = _label_state(labels) if numeric else None
     for i in range(max_iter):
+        # a node's own row carries its current label as __old too;
+        # neighbor rows carry NULL there, which min() skips
         neighbor = (sym.join(labels, sym["__a"] == labels["node"])
-                    .select(F.col("__b").alias("node"), "component"))
-        new = (labels.select("node", "component").union(neighbor)
-               .groupBy("node").agg(F.min("component").alias("component")))
-        new = new.localCheckpoint(eager=True)
-        if numeric:
-            cur = _label_state(new)
-            done = cur == prev and not (cur[0] > 0 and cur[1] is None)
-            prev = cur
-        else:
-            done = (new.join(
-                labels.withColumnRenamed("component", "__old"), "node")
-                .filter(F.col("component") != F.col("__old")).isEmpty())
+                    .select(F.col("__b").alias("node"), "component",
+                            F.lit(None).alias("__old")))
+        new = (labels.select("node", "component",
+                             F.col("component").alias("__old"))
+               .union(neighbor)
+               .groupBy("node")
+               .agg(F.min("component").alias("component"),
+                    F.min("__old").alias("__old")))
+        obs = Observation()
+        new = (new.observe(obs, F.count_if(F.col("component")
+                                           < F.col("__old")).alias("n"))
+               .select("node", "component").localCheckpoint(eager=True))
+        if i:
+            # the superseded round's checkpoint is dead once ``new`` is
+            # materialized; free its blocks now.  Otherwise they live
+            # until Python's cycle collector frees the py4j proxies of
+            # every frame planned over it, and then a JVM GC runs
+            labels._jdf.queryExecution().analyzed().rdd().unpersist(False)
         labels = new
-        if done:
+        if obs.get["n"] == 0:
             break
     # labels is an eager checkpoint — independent of the pair cache
     sym.unpersist()

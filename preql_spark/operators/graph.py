@@ -413,8 +413,8 @@ def shortest_paths(edges: DataFrame, sources: DataFrame,
     ``localCheckpoint`` per round bounds lineage; early-exit on
     convergence.
 
-    Convergence test (r14, guide §1.2 — same argument as
-    connected_components' label-sum): nodes never LEAVE the dist
+    Convergence test (r14, guide §1.2 — labels-only-decrease, the
+    argument connected_components also uses): nodes never LEAVE the dist
     table (``new`` unions the old table) and distances only ever
     DECREASE, so the round changed something iff the row count grew
     or the exact dist sum dropped.  One (count, decimal(38,0) sum)

@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 
 #: storage level for corpus-scale operator-internal reuse caches
 #: (tf_idf doc_term, lm_perplexity bigrams, duplicate_spans grams,
-#: minhash shingle sets): MEMORY_AND_DISK is the SERIALIZED variant
+#: minhash shingle sets with their signatures, the connected-components
+#: pair graph): MEMORY_AND_DISK is the SERIALIZED variant
 #: in PySpark (the deserialized default is MEMORY_AND_DISK_DESER) —
 #: ~10%+ smaller in-memory footprint, so at 100 TB the cache evicts
 #: less and recomputes less; the disk-spilled remainder is serialized
@@ -25,7 +26,8 @@ from pyspark.sql import functions as F
 #: unpersist it — callers that loop these operators in a long-lived
 #: session should spark.catalog.clearCache() (or unpersist via the
 #: plan) once their terminal action completes.  (r15, VERDICT r14
-#: item 4.)
+#: item 4.)  The exception is an operator that runs its own actions:
+#: connected_components unpersists its pair graph before returning.
 _SER_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 # Small per-language stopword sets for the n-gram/stopword heuristic.

@@ -443,6 +443,14 @@ def test_connected_components_and_canonical(eng):
     kept = sorted(r.doc_id for r in
                   dedup_keep_canonical(docs, pairs, "doc_id").collect())
     assert kept == [1, 10, 20, 99]
+    # string ids: same min-label rule under string ordering
+    spairs = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("d", "c"), ("y", "x"), ("q", "p")],
+        "id_a: string, id_b: string")
+    scomp = {r.node: r.component for r in
+             connected_components(spairs).collect()}
+    assert scomp == {"a": "a", "b": "a", "c": "a", "d": "a",
+                     "x": "x", "y": "x", "p": "p", "q": "p"}
 
 
 def test_concentration(eng):

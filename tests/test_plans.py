@@ -447,6 +447,80 @@ def test_minhash_signature_scan_local(spark):
     assert plan.count("xxhash64") == 1, plan
 
 
+def _under_in_memory_relation(plan: str, needle: str) -> list[bool]:
+    """For each line of a tree-string ``plan`` containing ``needle``:
+    whether one of its ancestor nodes is an InMemoryRelation (the
+    expression is computed while BUILDING a cache, not per scan)."""
+    out, stack = [], []   # stack of (indent, line) ancestors
+    for line in plan.splitlines():
+        body = line.lstrip(" :+-")
+        indent = len(line) - len(body)
+        while stack and stack[-1][0] >= indent:
+            stack.pop()
+        if needle in body:
+            out.append(any("InMemoryRelation" in a for _, a in stack))
+        stack.append((indent, body))
+    return out
+
+
+def test_minhash_lsh_signature_computed_in_cache(spark):
+    """The MinHash signature is computed inside the shingle cache the
+    LSH operator persists: in the executed plan, the xxhash64 base
+    hash and the ``array_min(transform(...))`` minima appear only
+    under the InMemoryRelation.  Computed above the cache, each side
+    of the band self-join would re-run the signature pass (Catalyst
+    does not reuse an exchange over a lambda-heavy plan)."""
+    from preql_spark.operators.dedup import minhash_lsh_pairs
+    d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    pairs = minhash_lsh_pairs(d, "doc_id", threshold=0.9)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    for needle in ("xxhash64", "array_min(transform"):
+        where = _under_in_memory_relation(plan, needle)
+        assert where and all(where), (needle, plan)
+
+
+def test_connected_components_runs_no_collect(spark, monkeypatch):
+    """Convergence is observed inside each round's checkpoint job: the
+    operator runs no ``collect`` (no seed label-state action, no
+    per-round one)."""
+    from preql_spark.operators.dedup import connected_components
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long")
+
+    def no_collect(self):
+        raise AssertionError("connected_components ran a collect")
+
+    with monkeypatch.context() as m:
+        m.setattr(type(pairs), "collect", no_collect)
+        comp = connected_components(pairs)
+    assert {(r.node, r.component) for r in comp.collect()} == {
+        (1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
+
+
+def test_connected_components_pair_graph_single_scan(spark, monkeypatch):
+    """Both edge directions come from ONE scan of the pairs (a
+    two-element struct array exploded per pair): the persisted pair
+    graph has no Union, which would run the whole lazy pair plan
+    (the LSH pipeline, in q73/q209) twice."""
+    from preql_spark.operators.dedup import connected_components
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
+    persisted = []
+    cls = type(pairs)
+    persist = cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(cls, "persist", recording_persist)
+        connected_components(pairs)
+    assert len(persisted) == 1
+    plan = plan_of(persisted[0])
+    assert "Union" not in plan, plan
+
+
 def test_scd2_single_exchange(spark):
     """Both SCD2 window passes partition on the business key — the
     second window must reuse the first's hash partitioning (exactly
