@@ -120,6 +120,3 @@ def median(col) -> Column:
     100 TB scale instead."""
     return F.percentile(_c(col), F.lit(0.5))
 
-
-def approx_median(col) -> Column:
-    return F.percentile_approx(_c(col), 0.5)

@@ -2693,17 +2693,6 @@ def _plain_col_name(c: Column) -> str | None:
     return name
 
 
-# Aggregate / scalar builtins (dual-mode like the reference stdlib:
-# whole-table when called on a table, in-group when inside `=> ...`).
-def _agg_or_table(parser: Parser, fcol, fall):
-    def apply(args):
-        v = args[0] if args else None
-        if isinstance(v, Table):
-            return fall(v)
-        return fcol(parser._col(v) if v is not None else None)
-    return apply
-
-
 def _type_name_of(parser: Parser, v) -> str:
     """Runtime Preql type name (reference obj.type)."""
     if isinstance(v, bool):

@@ -52,11 +52,6 @@ def kmeans(df: DataFrame, k: int = 8, iters: int = 2,
     return out, cents
 
 
-def cluster_sizes(assignments: DataFrame) -> DataFrame:
-    """(cluster, n) — one tiny hash aggregate."""
-    return assignments.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
-
-
 def semdedup(df: DataFrame, tau: float = 0.45, k: int = 8, iters: int = 2,
              id_col: str = "vec_id", vec_col: str = "embedding",
              keep: str = "min_id",

@@ -62,15 +62,6 @@ def token_shingles(col, k: int = 3) -> Column:
     return shingles_from_tokens(tokens(col), k)
 
 
-def char_shingles(col, k: int = 8) -> Column:
-    """Distinct k-char shingles."""
-    c = col if isinstance(col, Column) else F.col(col)
-    n = F.length(c)
-    return F.array_distinct(F.transform(
-        F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-        lambda i: F.substring(c, i, k)))
-
-
 # ---- MinHash + LSH ---------------------------------------------------------
 
 _MERSENNE31 = 2147483647  # 2^31 - 1

@@ -16,6 +16,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from preql_spark.parquet_io import (_hadoop_fs_path, _jpath_cls,
+                                    hadoop_dir_has_files)
+
 
 def read_event_stream(spark: SparkSession, path: str,
                       schema=None, ts_col: str = "ts",
@@ -220,6 +223,189 @@ def run_to_memory(result: DataFrame, name: str,
     return result.sparkSession.table(name)
 
 
+# ---- the ingest skeleton ---------------------------------------------------
+# Every incremental_*_ingest below drains its source through _drain
+# with its own foreachBatch sink.  The sinks share two per-epoch
+# bodies: _epoch_fold (ids anti-join → fold → (run_id, batch_id)-
+# guarded state append → ids append LAST) and _sidecar_epoch (the
+# ids-sidecar + intent crash protocol).  _drop_seen is the ids-only
+# anti-join every idempotence contract here rests on.
+
+
+def _drain(spark: SparkSession, src_path: str, checkpoint: str, schema,
+           sink) -> None:
+    """Run ``sink(batch, batch_id)`` as the ``foreachBatch`` body of an
+    availableNow file stream over ``src_path`` and block until the
+    currently-available input is drained.  The checkpoint's file log
+    is the incremental state: a re-run sees only files that arrived
+    since, and an epoch that crashed re-delivers under its batch id."""
+    (spark.readStream.schema(schema).parquet(src_path)
+     .writeStream.foreachBatch(sink)
+     .option("checkpointLocation", checkpoint)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
+
+
+def _read_if_any(s: SparkSession, path: str, depth: int = 0,
+                 refresh: bool = False) -> DataFrame | None:
+    """The parquet store at ``path``, or None while it has no files
+    (``depth=1`` for a partitioned store).  ``refresh`` drops cached
+    file listings first: a recovery read must see files appended by a
+    CRASHED previous attempt — possibly another process, or an
+    earlier in-session try whose write did not route through this
+    session's cache invalidation — or its anti-join silently misses
+    them."""
+    if not hadoop_dir_has_files(s, path, depth=depth):
+        return None
+    if refresh:
+        s.catalog.refreshByPath(path)
+    return s.read.parquet(path)
+
+
+def _drop_seen(frame: DataFrame, key: str, store: DataFrame | None,
+               col: str | None = None) -> DataFrame:
+    """``frame`` minus the rows whose ``key`` appears in column ``col``
+    (default ``key``) of ``store``: a left-anti join against the
+    store's column-pruned distinct ids.  A None store (no files yet)
+    drops nothing."""
+    if store is None:
+        return frame
+    seen = store.select(F.col(col or key).alias("__seen")).distinct()
+    return frame.join(seen, frame[key] == seen["__seen"], "left_anti")
+
+
+def _epoch_fold(state_path: str, ids_path: str, id_col: str, run_id: str,
+                fold, extra=None, dedup: bool = True):
+    """The foreachBatch sink of an epoch-guarded fold ingest (the
+    value histograms, data card, gate rate, HLL and t-digest).  Per
+    epoch, in order:
+
+    1. anti-join the ids store (a re-delivered id folds nothing);
+    2. drop in-batch duplicate ids, first writer wins — a duplicate
+       would double-fold (skip with ``dedup=False`` where the fold
+       ignores repeats: HLL);
+    3. persist the batch — one scan feeds every consumer;
+    4. ``fold(batch)`` builds the epoch's state rows, stamped with
+       ``batch_id`` and the lineage's ``run_id``;
+    5. anti-join them against the state's committed ``(run_id,
+       batch_id)`` set: counter sums and digest merges are NOT
+       re-apply-idempotent, so an epoch re-delivered after a crash
+       between the state and ids appends must not fold twice;
+    6. append them as ONE file, so a crash mid-append cannot freeze a
+       PARTIAL wave behind the epoch guard;
+    7. ``extra(s, batch)``, if given (the data card's inventory);
+    8. append the batch ids LAST — the fold must run before it,
+       because foreachBatch re-resolves parquet listings per action
+       and a later action would anti-join the batch's own ids away;
+    9. unpersist, also when a step raises.
+
+    The state reads through :func:`_read_state` with the writer's
+    schema, so pre-guard legacy files bridge to the closed
+    ``('__legacy__', -1)`` lineage."""
+    def _sink(batch: DataFrame, batch_id: int) -> None:
+        s = batch.sparkSession
+        batch = _drop_seen(batch, id_col, _read_if_any(s, ids_path))
+        if dedup:
+            batch = batch.dropDuplicates([id_col])
+        batch = batch.persist()
+        try:
+            rows = (fold(batch)
+                    .withColumn("batch_id",
+                                F.lit(int(batch_id)).cast("long"))
+                    .withColumn("run_id", F.lit(run_id)))
+            if hadoop_dir_has_files(s, state_path):
+                st = _read_state(s, state_path, schema=rows.schema)
+                rows = rows.join(
+                    st.select("run_id", "batch_id").distinct(),
+                    ["run_id", "batch_id"], "left_anti")
+            rows.coalesce(1).write.mode("append").parquet(state_path)
+            if extra is not None:
+                extra(s, batch)
+            batch.select(id_col).write.mode("append").parquet(ids_path)
+        finally:
+            batch.unpersist(blocking=False)
+    return _sink
+
+
+def _sidecar_epoch(s: SparkSession, rows: DataFrame, batch_id: int,
+                   ids_path: str, run_id: str, key: str, seen,
+                   append) -> None:
+    """One epoch of the ids-sidecar crash protocol shared by
+    :func:`incremental_ivf_ingest` and
+    :func:`incremental_curation_ingest` (``ids_path`` given).
+    ``rows`` is the epoch's in-batch-deduped frame keyed by ``key``;
+    ``seen(s)`` reads the caller's ground-truth store (None while it
+    is empty) and ``append(rows)`` writes the survivors to it.  The
+    sidecar holds ``(__id, run_id, batch_id)`` rows; the intent store
+    ``<ids_path>__intent`` holds one ``(run_id, batch_id)`` row per
+    started epoch, written BEFORE the store append:
+
+    - epoch already in the SIDECAR → the whole batch committed; the
+      replay is a no-op.
+    - epoch in the INTENT store only → the previous attempt crashed
+      around the store append; this recovery epoch anti-joins the
+      ground-truth store (which holds exactly the rows that must not
+      double-append), then completes the ids row.
+    - epoch in neither → fast path: intent row, then anti-join the
+      sidecar only."""
+    this_epoch = ((F.col("run_id") == run_id)
+                  & (F.col("batch_id") == int(batch_id)))
+    ids = _read_if_any(s, ids_path)
+    if ids is not None and not ids.filter(this_epoch).isEmpty():
+        return   # epoch fully committed; checkpoint replay no-op
+    intent_path = ids_path.rstrip("/") + "__intent"
+    intent = _read_if_any(s, intent_path)
+    crashed = intent is not None and not intent.filter(this_epoch).isEmpty()
+    all_ids = rows.select(F.col(key).alias("__id"))   # full deduped set
+    if crashed:
+        rows = _drop_seen(rows, key, seen(s))   # store is ground truth
+    else:
+        # JVM-side one-row frame: createDataFrame(...).coalesce(1)
+        # costs seconds (one task evaluating every parent Python-RDD
+        # partition); range(1) writes one file in ms
+        (s.range(1)
+         .select(F.lit(run_id).alias("run_id"),
+                 F.lit(int(batch_id)).cast("long").alias("batch_id"))
+         .write.mode("append").parquet(intent_path))
+        rows = _drop_seen(rows, key, ids, "__id")
+    # eager localCheckpoint, NOT persist: the survivors feed TWO
+    # actions (store append, then ids append), and in recovery the
+    # anti-join reads the very store the first action appends to —
+    # foreachBatch re-resolves parquet listings per action, so a
+    # recomputed second action would see the batch's own rows in the
+    # store and anti-join ITSELF away (no ids row written — caught by
+    # the crash-injection pytest).  The checkpoint cuts the lineage
+    # so both actions read the materialized survivors
+    rows = rows.localCheckpoint(eager=True)
+    append(rows)
+    # the sidecar row set: on the fast path the survivors suffice
+    # (non-survivors were dropped BY the sidecar, so they are in it
+    # already) — but in RECOVERY the anti-join ran against the STORE,
+    # and ids the crashed attempt already appended (or that the
+    # caller's append filters out, like curation's gate-rejects) are
+    # NOT in the sidecar; writing only survivors would leave them
+    # sidecar-invisible forever, so a LATER epoch re-delivering them
+    # would fast-path anti-join the sidecar alone and re-append them.
+    # Recovery therefore writes the FULL deduped batch id set; the
+    # sidecar probe distincts, so overlap with other epochs' rows is
+    # harmless.  Every epoch ALSO writes one NULL-__id epoch-marker
+    # row: an all-duplicates batch (at-least-once re-delivery as new
+    # files) would otherwise commit ZERO sidecar rows, leaving replay
+    # detection hanging on its intent row forever — the marker makes
+    # "epoch committed" sidecar-decidable, so the intent store prunes
+    # to EMPTY in steady state (:func:`compact_ingest_ids`).  NULL
+    # never equi-joins, so the dedup probe is blind to markers
+    id_t = rows.schema[key].dataType
+    mark = (all_ids if crashed
+            else rows.select(F.col(key).alias("__id"))).unionByName(
+        s.range(1).select(F.lit(None).cast(id_t).alias("__id")))
+    (mark
+     .withColumn("run_id", F.lit(run_id))
+     .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+     .coalesce(1).write.mode("append").parquet(ids_path))
+
+
 def incremental_dedup_ingest(spark: SparkSession, src_path: str,
                              store_path: str, checkpoint: str,
                              id_col: str = "doc_id",
@@ -256,19 +442,11 @@ def incremental_dedup_ingest(spark: SparkSession, src_path: str,
         winners = (b.groupBy("__fp").agg(F.min(id_col).alias(id_col))
                    .select(id_col))
         b = b.join(winners, id_col, "left_semi")
-        from preql_spark.parquet_io import hadoop_dir_has_files
-        if hadoop_dir_has_files(batch.sparkSession, store_path):
-            seen = (batch.sparkSession.read.parquet(store_path)
-                    .select("__fp").distinct())
-            b = b.join(seen, "__fp", "left_anti")
+        b = _drop_seen(b, "__fp", _read_if_any(batch.sparkSession,
+                                               store_path))
         b.write.mode("append").parquet(store_path)
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain(spark, src_path, checkpoint, schema, _sink)
     return spark.read.parquet(store_path)
 
 
@@ -322,7 +500,6 @@ def incremental_neardup_ingest(spark: SparkSession, src_path: str,
     from preql_spark.operators.dedup import (minhash_signature_df,
                                              shingles_from_tokens)
     from preql_spark.operators.text import tokens
-    from preql_spark.parquet_io import hadoop_dir_has_files
 
     if shingle_mode not in ("string", "hash"):
         raise ValueError(
@@ -352,12 +529,8 @@ def incremental_neardup_ingest(spark: SparkSession, src_path: str,
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
-        have_state = hadoop_dir_has_files(s, state_path)
-        if have_state:
-            seen_ids = s.read.parquet(state_path).select(
-                F.col(id_col).alias("__id"))
-            batch = batch.join(
-                seen_ids, batch[id_col] == seen_ids["__id"], "left_anti")
+        st = _read_if_any(s, state_path)
+        batch = _drop_seen(batch, id_col, st)
         # tokenize in its own projection: shingling slices the token
         # array per shingle, and an inline tokens() expression would
         # re-run the regex split for every slice
@@ -369,81 +542,82 @@ def incremental_neardup_ingest(spark: SparkSession, src_path: str,
                            tokens(F.coalesce(F.col(text_col), F.lit("")))
                            .alias("__t"))
               .select("__id", sh_col.alias("__sh")).persist())
-        sig = minhash_signature_df(sh, "__id", "__sh", n_hashes,
-                                   portable=False)
-        band_arr = F.array(*[
-            F.hash(F.slice("__sig", b * rows_per_band + 1, rows_per_band))
-            for b in range(bands)])
-        # LEFT join + empty-array coalesce: a doc whose text yields no
-        # shingles (NULL/empty) has no signature rows, but it is still
-        # SEEN — it must land in the state (replay idempotence) even
-        # though it can never band-match anything
-        new_state = sig.select("__id", band_arr.alias("__bands")) \
-            .join(sh, "__id", "right") \
-            .select(F.col("__id").alias(id_col),
-                    F.coalesce(F.col("__bands"),
-                               F.array().cast("array<int>"))
-                    .alias("bands"),
-                    F.coalesce(F.col("__sh"), F.array().cast(
-                        "array<string>" if shingle_mode == "string"
-                        else "array<long>"))
-                    .alias("sh")).persist()
-        batch_banded = new_state.select(
-            F.col(id_col).alias("__id"), F.lit(False).alias("__st"),
-            F.posexplode("bands").alias("__band", "__bkey"))
-        all_banded, all_sh = batch_banded, sh
-        if have_state:
-            st = s.read.parquet(state_path)
-            all_banded = all_banded.unionByName(st.select(
-                F.col(id_col).alias("__id"), F.lit(True).alias("__st"),
-                F.posexplode("bands").alias("__band", "__bkey")))
-            all_sh = all_sh.unionByName(st.select(
-                F.col(id_col).alias("__id"), F.col("sh").alias("__sh")))
-        wb = Window.partitionBy("__band", "__bkey")
-        all_banded = (all_banded
-                      .withColumn("__bn", F.count(F.lit(1)).over(wb))
-                      .filter(F.col("__bn") <= max_bucket).drop("__bn"))
-        # the witness side (a) is any STATE doc — first-seen-wins
-        # regardless of id order — or a lower-id doc of this batch
-        a, b = all_banded.alias("a"), batch_banded.alias("b")
-        cands = (a.join(b, (F.col("a.__band") == F.col("b.__band"))
-                        & (F.col("a.__bkey") == F.col("b.__bkey"))
-                        & (F.col("a.__st") | (F.col("a.__id") < F.col("b.__id")))
-                        & (F.col("a.__id") != F.col("b.__id")))
-                 .select(F.col("a.__id").alias("id_a"),
-                         F.col("b.__id").alias("id_b"))
-                 .dropDuplicates(["id_a", "id_b"]))
-        cands = (cands
-                 .join(all_sh.select(F.col("__id").alias("id_a"),
-                                     F.col("__sh").alias("sh_a")), "id_a")
-                 .join(all_sh.select(F.col("__id").alias("id_b"),
-                                     F.col("__sh").alias("sh_b")), "id_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        drops = (cands.filter((inter / union).cast("double") >= threshold)
-                 .select(F.col("id_b").alias("__drop")).distinct())
-        survivors = batch.join(
-            drops, batch[id_col] == drops["__drop"], "left_anti")
-        # crash-window idempotence: a replay that died between the two
-        # appends re-derives the same survivors — anti-join against
-        # the store's ids so they are not appended twice
-        if hadoop_dir_has_files(s, store_path):
-            stored = s.read.parquet(store_path).select(
-                F.col(id_col).alias("__sid"))
-            survivors = survivors.join(
-                stored, survivors[id_col] == stored["__sid"], "left_anti")
-        survivors.write.mode("append").parquet(store_path)
-        # every seen doc (kept or dropped) becomes state for later waves
-        new_state.write.mode("append").parquet(state_path)
-        new_state.unpersist()
-        sh.unpersist()
+        new_state = None
+        try:
+            sig = minhash_signature_df(sh, "__id", "__sh", n_hashes,
+                                       portable=False)
+            band_arr = F.array(*[
+                F.hash(F.slice("__sig", b * rows_per_band + 1,
+                               rows_per_band))
+                for b in range(bands)])
+            # LEFT join + empty-array coalesce: a doc whose text
+            # yields no shingles (NULL/empty) has no signature rows,
+            # but it is still SEEN — it must land in the state (replay
+            # idempotence) even though it can never band-match
+            new_state = sig.select("__id", band_arr.alias("__bands")) \
+                .join(sh, "__id", "right") \
+                .select(F.col("__id").alias(id_col),
+                        F.coalesce(F.col("__bands"),
+                                   F.array().cast("array<int>"))
+                        .alias("bands"),
+                        F.coalesce(F.col("__sh"), F.array().cast(
+                            "array<string>" if shingle_mode == "string"
+                            else "array<long>"))
+                        .alias("sh")).persist()
+            batch_banded = new_state.select(
+                F.col(id_col).alias("__id"), F.lit(False).alias("__st"),
+                F.posexplode("bands").alias("__band", "__bkey"))
+            all_banded, all_sh = batch_banded, sh
+            if st is not None:
+                all_banded = all_banded.unionByName(st.select(
+                    F.col(id_col).alias("__id"), F.lit(True).alias("__st"),
+                    F.posexplode("bands").alias("__band", "__bkey")))
+                all_sh = all_sh.unionByName(st.select(
+                    F.col(id_col).alias("__id"), F.col("sh").alias("__sh")))
+            wb = Window.partitionBy("__band", "__bkey")
+            all_banded = (all_banded
+                          .withColumn("__bn", F.count(F.lit(1)).over(wb))
+                          .filter(F.col("__bn") <= max_bucket).drop("__bn"))
+            # the witness side (a) is any STATE doc — first-seen-wins
+            # regardless of id order — or a lower-id doc of this batch
+            a, b = all_banded.alias("a"), batch_banded.alias("b")
+            cands = (a.join(b, (F.col("a.__band") == F.col("b.__band"))
+                            & (F.col("a.__bkey") == F.col("b.__bkey"))
+                            & (F.col("a.__st")
+                               | (F.col("a.__id") < F.col("b.__id")))
+                            & (F.col("a.__id") != F.col("b.__id")))
+                     .select(F.col("a.__id").alias("id_a"),
+                             F.col("b.__id").alias("id_b"))
+                     .dropDuplicates(["id_a", "id_b"]))
+            cands = (cands
+                     .join(all_sh.select(F.col("__id").alias("id_a"),
+                                         F.col("__sh").alias("sh_a")),
+                           "id_a")
+                     .join(all_sh.select(F.col("__id").alias("id_b"),
+                                         F.col("__sh").alias("sh_b")),
+                           "id_b"))
+            inter = F.size(F.array_intersect("sh_a", "sh_b"))
+            union = F.size("sh_a") + F.size("sh_b") - inter
+            drops = (cands.filter((inter / union).cast("double")
+                                  >= threshold)
+                     .select(F.col("id_b").alias("__drop")).distinct())
+            survivors = batch.join(
+                drops, batch[id_col] == drops["__drop"], "left_anti")
+            # crash-window idempotence: a replay that died between the
+            # two appends re-derives the same survivors — anti-join
+            # against the store's ids so they are not appended twice
+            survivors = _drop_seen(survivors, id_col,
+                                   _read_if_any(s, store_path))
+            survivors.write.mode("append").parquet(store_path)
+            # every seen doc (kept or dropped) becomes state for later
+            # waves
+            new_state.write.mode("append").parquet(state_path)
+        finally:
+            if new_state is not None:
+                new_state.unpersist()
+            sh.unpersist()
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain(spark, src_path, checkpoint, schema, _sink)
     return spark.read.parquet(store_path)
 
 
@@ -467,26 +641,16 @@ def incremental_postings_ingest(spark: SparkSession, src_path: str,
     Docs whose text yields no terms (NULL/empty) simply produce no
     posting rows; re-examining them on replay is a no-op."""
     from preql_spark.operators.text import postings
-    from preql_spark.parquet_io import hadoop_dir_has_files
 
     schema = _source_schema(spark, src_path, checkpoint)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if hadoop_dir_has_files(s, index_path):
-            seen = (s.read.parquet(index_path)
-                    .select(F.col(id_col).alias("__seen")).distinct())
-            batch = batch.join(
-                seen, batch[id_col] == seen["__seen"], "left_anti")
+        batch = _drop_seen(batch, id_col,
+                           _read_if_any(batch.sparkSession, index_path))
         (postings(batch, id_col=id_col, text_col=text_col)
          .write.mode("append").parquet(index_path))
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain(spark, src_path, checkpoint, schema, _sink)
     return spark.read.parquet(index_path)
 
 
@@ -525,7 +689,9 @@ def incremental_ivf_ingest(spark: SparkSession, src_path: str,
     lets :func:`compact_ingest_ids` prune the intent store to empty.
     Crash windows stay closed via that tiny intent store
     (``<ids_path>__intent``, one row per epoch, written BEFORE the
-    index append; the ids row is written AFTER):
+    index append; the ids row is written AFTER) — the ids-sidecar
+    protocol of :func:`_sidecar_epoch`, shared with
+    :func:`incremental_curation_ingest`:
 
     - epoch already in the SIDECAR → the whole batch committed;
       replay is a no-op.
@@ -544,7 +710,6 @@ def incremental_ivf_ingest(spark: SparkSession, src_path: str,
     scan-local assignment + one ids-only anti-join against one
     compacted sidecar file; the corpus-sized index is never
     re-shuffled and (on the fast path) never re-listed."""
-    from preql_spark.parquet_io import hadoop_dir_has_files
     from preql_spark.operators.similarity import assign_cells_hof
 
     intent_path = (ids_path.rstrip("/") + "__intent"
@@ -553,21 +718,18 @@ def incremental_ivf_ingest(spark: SparkSession, src_path: str,
     schema = _source_schema(spark, src_path, checkpoint)
     run_id = _ingest_run_id(spark, checkpoint) if ids_path else None
 
-    def _index_seen(s: SparkSession) -> DataFrame | None:
+    def _index(s: SparkSession) -> DataFrame | None:
         # depth=1: the index is cell-partitioned (__cid=*/...), so a
         # direct-children probe would read it as EMPTY and silently
         # skip the self-guarding anti-join (latent until the r11
         # crash-injection test caught it)
-        if not hadoop_dir_has_files(s, index_path, depth=1):
-            return None
-        # drop any cached file listing first: the self-guarding read
-        # must see files appended by a CRASHED previous attempt —
-        # possibly another process entirely, or an earlier in-session
-        # try whose write didn't route through this session's cache
-        # invalidation — or the anti-join silently misses them
-        s.catalog.refreshByPath(index_path)
-        return (s.read.parquet(index_path)
-                .select(F.col("__id").alias("__seen")).distinct())
+        return _read_if_any(s, index_path, depth=1, refresh=True)
+
+    def _append(rows: DataFrame) -> None:
+        (assign_cells_hof(rows, centroids)
+         .select("__cid", "__id", "__v")
+         .write.mode("append").partitionBy("__cid")
+         .parquet(index_path))
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
@@ -576,89 +738,12 @@ def incremental_ivf_ingest(spark: SparkSession, src_path: str,
                 .dropDuplicates(["__id"]))
         if ids_path is None:
             # legacy self-guarding path: anti-join the index itself
-            seen = _index_seen(s)
-            if seen is not None:
-                rows = rows.join(seen, rows["__id"] == seen["__seen"],
-                                 "left_anti").drop("__seen")
-            (assign_cells_hof(rows, centroids)
-             .select("__cid", "__id", "__v")
-             .write.mode("append").partitionBy("__cid")
-             .parquet(index_path))
-            return
-        this_epoch = ((F.col("run_id") == run_id)
-                      & (F.col("batch_id") == int(batch_id)))
-        ids = (s.read.parquet(ids_path)
-               if hadoop_dir_has_files(s, ids_path) else None)
-        if ids is not None and not ids.filter(this_epoch).isEmpty():
-            return   # epoch fully committed; checkpoint replay no-op
-        crashed = (hadoop_dir_has_files(s, intent_path)
-                   and not s.read.parquet(intent_path)
-                   .filter(this_epoch).isEmpty())
-        if not crashed:
-            # intent FIRST, so a crash around the index append is
-            # detectable and recovery can self-guard on the index
-            # JVM-side one-row frame: createDataFrame(...).coalesce(1)
-            # costs seconds (one task evaluating every parent
-            # Python-RDD partition); range(1) writes one file in ms
-            (s.range(1)
-             .select(F.lit(run_id).alias("run_id"),
-                     F.lit(int(batch_id)).cast("long")
-                     .alias("batch_id"))
-             .write.mode("append").parquet(intent_path))
-            seen = (ids.select(F.col("__id").alias("__seen")).distinct()
-                    if ids is not None else None)
+            _append(_drop_seen(rows, "__id", _index(s)))
         else:
-            seen = _index_seen(s)   # recovery: index is ground truth
-        all_ids = rows.select("__id")   # full deduped batch id set
-        if seen is not None:
-            rows = rows.join(seen, rows["__id"] == seen["__seen"],
-                             "left_anti").drop("__seen")
-        # eager localCheckpoint, NOT persist: the survivors feed TWO
-        # actions (index append, then ids append), and the anti-join
-        # reads the very store the first action appends to —
-        # foreachBatch re-resolves parquet listings per action, so a
-        # recomputed second action would see the batch's own rows in
-        # the index and anti-join ITSELF away (no ids row written —
-        # caught by the crash-injection pytest).  The checkpoint cuts
-        # the lineage so both actions read the materialized survivors
-        rows = rows.localCheckpoint(eager=True)
-        (assign_cells_hof(rows, centroids)
-         .select("__cid", "__id", "__v")
-         .write.mode("append").partitionBy("__cid")
-         .parquet(index_path))
-        # the sidecar row set: on the fast path the survivors suffice
-        # (non-survivors were dropped BY the sidecar, so they are in
-        # it already) — but in RECOVERY the anti-join ran against the
-        # INDEX, and ids the crashed attempt already appended are in
-        # the index yet NOT in the sidecar; writing only survivors
-        # would leave them sidecar-invisible forever, so a LATER
-        # epoch re-delivering them would fast-path anti-join the
-        # sidecar alone and re-append duplicates.  Recovery therefore
-        # writes the FULL deduped batch id set (survivors ∪ batch ids
-        # found in the index); the sidecar probe distincts, so the
-        # overlap with other completed epochs' rows is harmless.
-        # Every epoch ALSO writes one NULL-__id epoch-marker row: an
-        # all-duplicates batch (at-least-once re-delivery as new
-        # files) would otherwise commit ZERO sidecar rows, leaving
-        # replay detection hanging on its intent row forever — the
-        # marker makes "epoch committed" sidecar-decidable, so the
-        # intent store prunes to EMPTY in steady state
-        # (:func:`compact_ingest_ids`).  NULL never equi-joins, so
-        # the dedup probe is blind to markers by construction
-        id_t = rows.schema["__id"].dataType
-        mark = (all_ids if crashed else rows.select("__id")).unionByName(
-            s.range(1).select(F.lit(None).cast(id_t).alias("__id")))
-        (mark
-         .withColumn("run_id", F.lit(run_id))
-         .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-         .coalesce(1).write.mode("append").parquet(ids_path))
+            _sidecar_epoch(s, rows, batch_id, ids_path, run_id, "__id",
+                           _index, _append)
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain(spark, src_path, checkpoint, schema, _sink)
     return (spark.read.parquet(index_path)
             .groupBy(F.col("__cid").cast("int").alias("cell"))
             .agg(F.count(F.lit(1)).alias("n_vectors")))
@@ -723,7 +808,6 @@ def _source_schema(spark: SparkSession, src_path: str,
 
     from pyspark.sql.types import StructType
 
-    from preql_spark.parquet_io import _hadoop_fs_path, _jpath_cls
     fs, cp = _hadoop_fs_path(spark, checkpoint)
     jpath = _jpath_cls(spark)
     mpath = checkpoint.rstrip("/") + "/__source_schema"
@@ -767,7 +851,6 @@ def _ingest_run_id(spark: SparkSession, checkpoint: str) -> str:
     collide with state written under the old lineage."""
     import uuid
 
-    from preql_spark.parquet_io import _hadoop_fs_path, _jpath_cls
     fs, cp = _hadoop_fs_path(spark, checkpoint)
     marker = _jpath_cls(spark)(
         checkpoint.rstrip("/") + "/__ingest_run_id")
@@ -854,7 +937,6 @@ def _guard_stranded(spark: SparkSession, *paths) -> None:
     the ingest checks for an active compactor.  Stale locks (crashed
     holder) are ignored here — the crash's real damage, if any, is
     the backup this guard already catches."""
-    from preql_spark.parquet_io import _hadoop_fs_path
     for p in paths:
         if p is None:
             continue
@@ -935,7 +1017,6 @@ def _lock_is_live(spark: SparkSession, path: str) -> bool:
     this one or another — is compacting right now)."""
     import time
 
-    from preql_spark.parquet_io import _hadoop_fs_path
     fs, p = _hadoop_fs_path(spark, _lock_file(path))
     if not fs.exists(p):
         return False
@@ -976,7 +1057,6 @@ class _compaction_lock:
     def __enter__(self):
         import time
 
-        from preql_spark.parquet_io import _hadoop_fs_path
         fs, p = _hadoop_fs_path(self.spark, _lock_file(self.path))
         now = int(time.time() * 1000)
         if fs.exists(p):
@@ -1050,7 +1130,6 @@ def incremental_frequent_items_ingest(
 
     from preql_spark.operators.sketch import mg_merge, mg_summaries
     from preql_spark.operators.text import ensure_parallelism, tokens
-    from preql_spark.parquet_io import hadoop_dir_has_files
 
     if not 0.0 < phi < 1.0:
         raise ValueError(f"phi must be in (0, 1), got {phi}")
@@ -1068,37 +1147,9 @@ def incremental_frequent_items_ingest(
                 .select(F.explode(tokens(F.col(text_col))).alias("item"))
                 .filter(F.col("item") != ""))
 
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if hadoop_dir_has_files(s, store_path):
-            seen = (s.read.parquet(store_path)
-                    .select(F.col(id_col).alias("__seen")).distinct())
-            batch = batch.join(
-                seen, batch[id_col] == seen["__seen"], "left_anti")
-        # in-batch duplicate ids would double-fold their tokens AND
-        # double-append the doc to the store — dedup first (the
-        # curation-ingest contract).
-        # Two consumers (summary fold + store append) — one batch
-        # scan.  The summary fold MUST run before the append: the
-        # anti-join's store side re-resolves the parquet listing per
-        # action (the micro-batch plan is re-planned, the cache is
-        # not guaranteed to carry across actions), so a post-append
-        # action would see the batch's own ids in the store and
-        # anti-join the whole batch away — zero tokens folded.
-        batch = batch.dropDuplicates([id_col]).persist()
-        if hadoop_dir_has_files(s, state_path):
-            done = {(r["run_id"], r["batch_id"]) for r in
-                    _read_state(s, state_path,
-                                schema="item string, est bigint,"
-                                       " batch_id bigint,"
-                                       " run_id string")
-                    .select("run_id", "batch_id").distinct()
-                    .collect()}
-            if (run_id, int(batch_id)) in done:
-                # replayed wave: summary already folded
-                batch.write.mode("append").parquet(store_path)
-                batch.unpersist(blocking=False)
-                return
+    state_schema = "item string, est bigint, batch_id bigint, run_id string"
+
+    def _fold(s: SparkSession, batch: DataFrame, batch_id: int) -> None:
         rows = mg_summaries(_items(batch), cap).collect()
         counts: dict = {}
         n = 0
@@ -1113,23 +1164,41 @@ def incremental_frequent_items_ingest(
         # dict, and coalesce(1) over a default-sliced parallelize
         # would evaluate 32 empty Python-RDD partitions in ONE task
         # (a Python-worker round-trip each, seconds per epoch)
-        state = s.createDataFrame(
+        s.createDataFrame(
             s.sparkContext.parallelize(
                 [(k, int(v), int(batch_id), run_id)
                  for k, v in counts.items()]
                 + [(None, int(n), int(batch_id), run_id)], 1),
-            schema="item string, est bigint, batch_id bigint,"
-                   " run_id string")
-        state.write.mode("append").parquet(state_path)
-        batch.write.mode("append").parquet(store_path)
-        batch.unpersist(blocking=False)
+            schema=state_schema).write.mode("append").parquet(state_path)
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    def _sink(batch: DataFrame, batch_id: int) -> None:
+        s = batch.sparkSession
+        batch = _drop_seen(batch, id_col, _read_if_any(s, store_path))
+        # in-batch duplicate ids would double-fold their tokens AND
+        # double-append the doc to the store — dedup first (the
+        # curation-ingest contract).
+        # Two consumers (summary fold + store append) — one batch
+        # scan.  The summary fold MUST run before the append: the
+        # anti-join's store side re-resolves the parquet listing per
+        # action (the micro-batch plan is re-planned, the cache is
+        # not guaranteed to carry across actions), so a post-append
+        # action would see the batch's own ids in the store and
+        # anti-join the whole batch away — zero tokens folded.
+        batch = batch.dropDuplicates([id_col]).persist()
+        try:
+            done = set()
+            if hadoop_dir_has_files(s, state_path):
+                done = {(r["run_id"], r["batch_id"]) for r in
+                        _read_state(s, state_path, schema=state_schema)
+                        .select("run_id", "batch_id").distinct()
+                        .collect()}
+            if (run_id, int(batch_id)) not in done:
+                _fold(s, batch, batch_id)   # else: a replayed wave
+            batch.write.mode("append").parquet(store_path)
+        finally:
+            batch.unpersist(blocking=False)
+
+    _drain(spark, src_path, checkpoint, schema, _sink)
 
     state = _read_state(spark, state_path)
     n = (state.filter(F.col("item").isNull())
@@ -1170,8 +1239,9 @@ def incremental_quantile_ingest(
     Idempotence — including the crash windows: the state is
     APPEND-ONLY per-batch histogram rows ``(g, v, cnt, batch_id)``
     keyed by the micro-batch epoch id (stable across checkpoint
-    replays) and guarded by a distributed anti-join on that key, the
-    same contract as :func:`incremental_tdigest_ingest` — a batch
+    replays) and guarded by a distributed anti-join on that key (the
+    :func:`_epoch_fold` skeleton), the same contract as
+    :func:`incremental_tdigest_ingest` — a batch
     re-delivered after a crash between the state and ids appends
     rebuilds identical rows that the guard drops (counter sums,
     like digest merges, are NOT re-apply-idempotent, so an
@@ -1182,7 +1252,7 @@ def incremental_quantile_ingest(
     frequency-weighted percentile.  The value domain must be
     discrete — quantize continuous metrics to ticks first (or use
     the t-digest ingest)."""
-    merged = _group_value_histogram_ingest(
+    merged = _value_histogram_ingest(
         spark, src_path, checkpoint, state_path, ids_path,
         group_col, value_expr, id_col)
     aggs = [F.sum("cnt").alias("n")]
@@ -1192,66 +1262,53 @@ def incremental_quantile_ingest(
     return (merged.groupBy(F.col("g").alias(group_col)).agg(*aggs))
 
 
-def _group_value_histogram_ingest(
+def _value_histogram_ingest(
         spark: SparkSession, src_path: str, checkpoint: str,
         state_path: str, ids_path: str,
-        group_col: str, value_expr: str, id_col: str) -> DataFrame:
-    """Shared state machinery for the per-GROUP streaming monitors
-    (:func:`incremental_quantile_ingest`,
-    :func:`incremental_z_monitor_ingest` — the two can SHARE a
-    state): maintain the EXACT per-(group, value) integer histogram
-    — APPEND-ONLY per-batch rows ``(g, v, cnt, batch_id, run_id)``
-    guarded by the (run_id, batch_id) anti-join (the
-    :func:`_side_value_histogram_ingest` contract;
-    :func:`compact_ingest_state` kind ``"histogram"`` applies
-    unchanged); ids anti-join first and append LAST — and return
-    the merged ``(g, v, cnt)`` frame the reports read."""
-    from preql_spark.parquet_io import hadoop_dir_has_files
+        group_col: str, value_expr: str, id_col: str,
+        sides: tuple | None = None) -> DataFrame:
+    """Shared state machinery for the streaming value-histogram
+    monitors — per group (:func:`incremental_quantile_ingest`,
+    :func:`incremental_z_monitor_ingest`) and two-sample drift
+    (:func:`incremental_psi_ingest`, :func:`incremental_ks_ingest`,
+    :func:`incremental_chi_square_ingest`, with ``sides = (side_a,
+    side_b)`` restricting ``group_col`` to the two sides).  All of
+    them maintain ONE state shape, so they can share a state: the
+    EXACT per-(group, value) integer histogram — APPEND-ONLY
+    per-batch rows ``(g, v, cnt, batch_id, run_id)`` folded by
+    :func:`_epoch_fold` (ids anti-join first, the (run_id, batch_id)
+    epoch guard, ids append LAST); :func:`compact_ingest_state` kind
+    ``"histogram"`` compacts it.  The state is lossless, which is
+    what makes every report bit-identical to its batch operator over
+    the raw corpus.
 
+    Returns the merged ``(g, v, cnt)`` frame — or, with ``sides``,
+    the per-value ``(v, ca, cb)`` side counts the drift statistics
+    read."""
     _guard_stranded(spark, state_path, ids_path)
     schema = _source_schema(spark, src_path, checkpoint)
     run_id = _ingest_run_id(spark, checkpoint)
 
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if hadoop_dir_has_files(s, ids_path):
-            seen = (s.read.parquet(ids_path)
-                    .select(F.col(id_col).alias("__seen")).distinct())
-            batch = batch.join(
-                seen, batch[id_col] == seen["__seen"], "left_anti")
-        # in-batch duplicate ids would double-count the histogram —
-        # dedup before folding (the curation-ingest contract)
-        batch = batch.dropDuplicates([id_col]).persist()
-        rows = (batch.select(F.col(group_col).alias("g"),
+    def _fold(batch: DataFrame) -> DataFrame:
+        if sides is not None:
+            batch = batch.filter(F.col(group_col).isin(list(sides)))
+        return (batch.select(F.col(group_col).alias("g"),
                              F.expr(value_expr).cast("long").alias("v"))
                 .groupBy("g", "v")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .withColumn("batch_id",
-                            F.lit(int(batch_id)).cast("long"))
-                .withColumn("run_id", F.lit(run_id)))
-        if hadoop_dir_has_files(s, state_path):
-            st = _read_state(s, state_path, schema=rows.schema)
-            rows = rows.join(
-                st.select("run_id", "batch_id").distinct(),
-                ["run_id", "batch_id"], "left_anti")
-        # single-file append: the epoch's state commit is one part
-        # file, so a mid-append crash cannot freeze a PARTIAL wave
-        # behind the epoch guard
-        rows.coalesce(1).write.mode("append").parquet(state_path)
-        batch.select(id_col).write.mode("append").parquet(ids_path)
-        batch.unpersist(blocking=False)
+                .agg(F.count(F.lit(1)).alias("cnt")))
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-
-    return (_read_state(spark, state_path)
-            .drop("run_id", "batch_id")
-            .groupBy("g", "v").agg(F.sum("cnt").alias("cnt"))
-            .filter(F.col("cnt") > 0))   # drop per-run carrier rows
+    _drain(spark, src_path, checkpoint, schema,
+           _epoch_fold(state_path, ids_path, id_col, run_id, _fold))
+    merged = (_read_state(spark, state_path)
+              .groupBy("g", "v").agg(F.sum("cnt").alias("cnt"))
+              .filter(F.col("cnt") > 0))   # drop per-run carrier rows
+    if sides is None:
+        return merged
+    return (merged.groupBy("v")
+            .agg(*[F.sum(F.when(F.col("g") == F.lit(side),
+                                F.col("cnt")).otherwise(0))
+                   .cast("long").alias(name)
+                   for side, name in zip(sides, ("ca", "cb"))]))
 
 
 def incremental_z_monitor_ingest(
@@ -1263,7 +1320,7 @@ def incremental_z_monitor_ingest(
     of the drift-from-state family (PSI/KS/chi² watch distribution
     SHAPE; this watches which observed VALUES are outliers): maintain
     the exact per-(group, value) integer histogram
-    (:func:`_group_value_histogram_ingest` — the SAME state, sink,
+    (:func:`_value_histogram_ingest` — the SAME state, sink,
     guard, and compaction as :func:`incremental_quantile_ingest`;
     the two monitors can share one state) and report each distinct
     observed value's z-score against its group's mean/stddev computed
@@ -1284,80 +1341,10 @@ def incremental_z_monitor_ingest(
     the report is arithmetic over state rows (groups × distinct
     values), never the corpus."""
     from preql_spark.operators.events import z_outliers_from_value_counts
-    merged = _group_value_histogram_ingest(
+    merged = _value_histogram_ingest(
         spark, src_path, checkpoint, state_path, ids_path,
         group_col, value_expr, id_col)
     return z_outliers_from_value_counts(merged, k=k)
-
-
-def _side_value_histogram_ingest(
-        spark: SparkSession, src_path: str, checkpoint: str,
-        state_path: str, ids_path: str,
-        side_a, side_b, side_col: str,
-        value_expr: str, id_col: str) -> DataFrame:
-    """Shared state machinery for the streaming two-sample drift
-    monitors (:func:`incremental_psi_ingest`,
-    :func:`incremental_ks_ingest`): maintain the EXACT per-(side,
-    value) integer histogram — APPEND-ONLY per-batch rows ``(g, v,
-    cnt, batch_id, run_id)`` guarded by the (run_id, batch_id)
-    anti-join, the exact schema and contract of
-    :func:`incremental_quantile_ingest`, so
-    :func:`compact_ingest_state` (kind ``"histogram"``) applies
-    unchanged; ids anti-join first and append LAST — and return the
-    merged per-value ``(v, ca, cb)`` frame the report statistics
-    read.  The state is lossless, which is what makes every report
-    bit-identical to its batch operator over the raw corpus."""
-    from preql_spark.parquet_io import hadoop_dir_has_files
-
-    _guard_stranded(spark, state_path, ids_path)
-    schema = _source_schema(spark, src_path, checkpoint)
-    run_id = _ingest_run_id(spark, checkpoint)
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if hadoop_dir_has_files(s, ids_path):
-            seen = (s.read.parquet(ids_path)
-                    .select(F.col(id_col).alias("__seen")).distinct())
-            batch = batch.join(
-                seen, batch[id_col] == seen["__seen"], "left_anti")
-        # in-batch duplicate ids would double-count the histogram —
-        # dedup before folding (the curation-ingest contract)
-        batch = batch.dropDuplicates([id_col]).persist()
-        rows = (batch.filter(F.col(side_col).isin([side_a, side_b]))
-                .select(F.col(side_col).alias("g"),
-                        F.expr(value_expr).cast("long").alias("v"))
-                .groupBy("g", "v")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .withColumn("batch_id",
-                            F.lit(int(batch_id)).cast("long"))
-                .withColumn("run_id", F.lit(run_id)))
-        if hadoop_dir_has_files(s, state_path):
-            st = _read_state(s, state_path, schema=rows.schema)
-            rows = rows.join(
-                st.select("run_id", "batch_id").distinct(),
-                ["run_id", "batch_id"], "left_anti")
-        # single-file epoch commit (see the histogram sibling)
-        rows.coalesce(1).write.mode("append").parquet(state_path)
-        batch.select(id_col).write.mode("append").parquet(ids_path)
-        batch.unpersist(blocking=False)
-
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-
-    merged = (_read_state(spark, state_path)
-              .groupBy("g", "v").agg(F.sum("cnt").alias("cnt"))
-              .filter(F.col("cnt") > 0))   # per-run carrier rows
-    return (merged.groupBy("v")
-            .agg(F.sum(F.when(F.col("g") == F.lit(side_a),
-                              F.col("cnt")).otherwise(0))
-                 .cast("long").alias("ca"),
-                 F.sum(F.when(F.col("g") == F.lit(side_b),
-                              F.col("cnt")).otherwise(0))
-                 .cast("long").alias("cb")))
 
 
 def incremental_psi_ingest(
@@ -1380,11 +1367,11 @@ def incremental_psi_ingest(
     domain must be discrete (the batch operator's quantize-first
     contract), which also bounds the state by |sides| x |distinct
     values|, never the corpus.  State contract and crash-window
-    idempotence: see :func:`_side_value_histogram_ingest`."""
+    idempotence: see :func:`_value_histogram_ingest`."""
     from preql_spark.operators.events import psi_from_value_counts
-    vc = _side_value_histogram_ingest(
+    vc = _value_histogram_ingest(
         spark, src_path, checkpoint, state_path, ids_path,
-        side_a, side_b, side_col, value_expr, id_col)
+        side_col, value_expr, id_col, sides=(side_a, side_b))
     return psi_from_value_counts(vc, n_buckets=n_buckets)
 
 
@@ -1405,11 +1392,11 @@ def incremental_ks_ingest(
     values are excluded by the report (batch KS ignores them; the
     state may hold null-v rows when ``value_expr`` is NULL).
     State contract and crash-window idempotence: see
-    :func:`_side_value_histogram_ingest`."""
+    :func:`_value_histogram_ingest`."""
     from preql_spark.operators.events import ks_from_value_counts
-    vc = _side_value_histogram_ingest(
+    vc = _value_histogram_ingest(
         spark, src_path, checkpoint, state_path, ids_path,
-        side_a, side_b, side_col, value_expr, id_col)
+        side_col, value_expr, id_col, sides=(side_a, side_b))
     return ks_from_value_counts(vc)
 
 
@@ -1435,11 +1422,11 @@ def incremental_chi_square_ingest(
     rows).  ``value_expr`` must be discrete/categorical — the
     bounded-state contract of the family.  State contract and
     crash-window idempotence: see
-    :func:`_side_value_histogram_ingest`."""
+    :func:`_value_histogram_ingest`."""
     from preql_spark.operators.events import chi_square_from_value_counts
-    vc = _side_value_histogram_ingest(
+    vc = _value_histogram_ingest(
         spark, src_path, checkpoint, state_path, ids_path,
-        side_a, side_b, side_col, value_expr, id_col)
+        side_col, value_expr, id_col, sides=(side_a, side_b))
     return chi_square_from_value_counts(vc, side_a, side_b)
 
 
@@ -1480,10 +1467,11 @@ def incremental_datacard_ingest(
     :func:`preql_spark.operators.text.corpus_datacard` over the full
     corpus, cell for cell — that identity is the oracle.
 
-    Crash windows: ids anti-join first, appends ordered counters →
-    inventory → ids; a replay re-delivers the batch, the epoch guard
-    drops the counter rows, the inventory anti-join drops its rows,
-    and only the ids append completes.  Scale shape per batch: ONE
+    Crash windows (the :func:`_epoch_fold` skeleton): ids anti-join
+    first, appends ordered counters → inventory → ids; a replay
+    re-delivers the batch, the epoch guard drops the counter rows,
+    the inventory anti-join drops its rows, and only the ids append
+    completes.  Scale shape per batch: ONE
     scan of the batch (persisted across the three consumers), one
     tiny grouped agg, one inventory anti-join keyed on (group, fp)
     — the corpus is never re-read.
@@ -1504,38 +1492,20 @@ def incremental_datacard_ingest(
     window for pruned ids — same retention contract as every ingest
     here."""
     from preql_spark.operators.text import fingerprint64, token_count
-    from preql_spark.parquet_io import hadoop_dir_has_files
 
     gc = list(group_cols)
     _guard_stranded(spark, state_path, pairs_path, ids_path)
     schema = _source_schema(spark, src_path, checkpoint)
     run_id = _ingest_run_id(spark, checkpoint)
 
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if hadoop_dir_has_files(s, ids_path):
-            seen = (s.read.parquet(ids_path)
-                    .select(F.col(id_col).alias("__seen")).distinct())
-            batch = batch.join(
-                seen, batch[id_col] == seen["__seen"], "left_anti")
-        # in-batch duplicate ids would double-count every counter AND
-        # the ids store would still mark them ingested — dedup before
-        # folding, first writer wins (the curation-ingest contract)
-        batch = batch.dropDuplicates([id_col]).persist()
-        rows = (batch.groupBy(*[F.col(c) for c in gc])
+    def _fold(batch: DataFrame) -> DataFrame:
+        return (batch.groupBy(*[F.col(c) for c in gc])
                 .agg(F.count(F.lit(1)).alias("n_docs"),
                      F.sum(token_count(F.col(text_col)))
                      .alias("total_tokens"),
-                     F.sum(F.length(text_col)).alias("total_bytes"))
-                .withColumn("batch_id",
-                            F.lit(int(batch_id)).cast("long"))
-                .withColumn("run_id", F.lit(run_id)))
-        if hadoop_dir_has_files(s, state_path):
-            st = _read_state(s, state_path, schema=rows.schema)
-            rows = rows.join(
-                st.select("run_id", "batch_id").distinct(),
-                ["run_id", "batch_id"], "left_anti")
-        rows.coalesce(1).write.mode("append").parquet(state_path)
+                     F.sum(F.length(text_col)).alias("total_bytes")))
+
+    def _inventory(s: SparkSession, batch: DataFrame) -> None:
         prs = (batch.select(*gc, fingerprint64(F.col(text_col))
                             .alias("fp"))
                .filter(F.col("fp").isNotNull()).distinct())
@@ -1543,15 +1513,10 @@ def incremental_datacard_ingest(
             prs = prs.join(s.read.parquet(pairs_path),
                            gc + ["fp"], "left_anti")
         prs.write.mode("append").parquet(pairs_path)
-        batch.select(id_col).write.mode("append").parquet(ids_path)
-        batch.unpersist(blocking=False)
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain(spark, src_path, checkpoint, schema,
+           _epoch_fold(state_path, ids_path, id_col, run_id, _fold,
+                       extra=_inventory))
 
     st = (_read_state(spark, state_path).drop("run_id", "batch_id")
           # drop per-run lineage carrier rows (NULL metrics) that
@@ -1612,11 +1577,8 @@ def _gate_fingerprint_guard(spark: SparkSession, path: str,
     every parent Python-RDD partition, one Python-worker round-trip
     each (bench-measured ~5 s) — while the FS call is milliseconds
     on the per-ingest hot path."""
-    import json
-
-    from preql_spark.parquet_io import _hadoop_fs_path
-
     import functools
+    import json
 
     def _enc(o):
         # functools.partial / callable instances carry no
@@ -1681,18 +1643,17 @@ def incremental_gate_rate_ingest(
 
     State shape: the data-card counters contract exactly — one
     ``(group, n_docs, n_keep, batch_id, run_id)`` row per (epoch,
-    group), append-only with the (run_id, batch_id) epoch guard
-    (counter sums are not re-apply-idempotent); compacts with
-    :func:`compact_datacard_state` (``metric_cols=("n_docs",
-    "n_keep")``), ids store with :func:`compact_ingest_ids`.  The
-    report sums the state per group: two-wave ingestion == one-shot
-    == the batch gate + GROUP BY over the full corpus — that
-    identity is the oracle (q217).  The state carries a
-    params-fingerprint marker (:func:`_gate_fingerprint_guard`):
+    group), append-only with the (run_id, batch_id) epoch guard of
+    :func:`_epoch_fold` (counter sums are not re-apply-idempotent);
+    compacts with :func:`compact_datacard_state`
+    (``metric_cols=("n_docs", "n_keep")``), ids store with
+    :func:`compact_ingest_ids`.  The report sums the state per group:
+    two-wave ingestion == one-shot == the batch gate + GROUP BY over
+    the full corpus — that identity is the oracle (q217).  The state
+    carries a params-fingerprint marker (:func:`_gate_fingerprint_guard`):
     re-ingesting with changed gate parameters RAISES instead of
     silently folding two gate definitions into one monitor."""
     from preql_spark.operators.text import GATES
-    from preql_spark.parquet_io import hadoop_dir_has_files
 
     if gate not in GATES:
         raise ValueError(f"unknown gate {gate!r}: "
@@ -1710,42 +1671,17 @@ def incremental_gate_rate_ingest(
                             schema=source_schema)
     run_id = _ingest_run_id(spark, checkpoint)
 
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if hadoop_dir_has_files(s, ids_path):
-            seen = (s.read.parquet(ids_path)
-                    .select(F.col(id_col).alias("__seen")).distinct())
-            batch = batch.join(
-                seen, batch[id_col] == seen["__seen"], "left_anti")
-        # in-batch duplicate ids (at-least-once delivery inside ONE
-        # wave) would double-count n_docs/n_keep — dedup before
-        # gating, first writer wins (the curation-ingest contract)
-        batch = batch.dropDuplicates([id_col]).persist()
+    def _fold(batch: DataFrame) -> DataFrame:
         gated = gate_fn(batch.select(id_col, group_col, text_col),
                         id_col=id_col, text_col=text_col,
                         **gate_kwargs)
-        rows = (gated.groupBy(F.col(group_col))
+        return (gated.groupBy(F.col(group_col))
                 .agg(F.count(F.lit(1)).alias("n_docs"),
                      F.sum(F.col("keep").cast("long"))
-                     .alias("n_keep"))
-                .withColumn("batch_id",
-                            F.lit(int(batch_id)).cast("long"))
-                .withColumn("run_id", F.lit(run_id)))
-        if hadoop_dir_has_files(s, state_path):
-            st = _read_state(s, state_path, schema=rows.schema)
-            rows = rows.join(
-                st.select("run_id", "batch_id").distinct(),
-                ["run_id", "batch_id"], "left_anti")
-        rows.coalesce(1).write.mode("append").parquet(state_path)
-        batch.select(id_col).write.mode("append").parquet(ids_path)
-        batch.unpersist(blocking=False)
+                     .alias("n_keep")))
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain(spark, src_path, checkpoint, schema,
+           _epoch_fold(state_path, ids_path, id_col, run_id, _fold))
 
     st = (_read_state(spark, state_path).drop("run_id", "batch_id")
           .filter(F.col("n_docs").isNotNull()))
@@ -1792,7 +1728,8 @@ def incremental_curation_ingest(
     per-batch anti-join scans the whole (growing) curated store.
 
     WITH ``ids_path``, dedup moves to a dedicated sidecar — the
-    :func:`incremental_ivf_ingest` machinery VERBATIM (same schema
+    ids-sidecar protocol of :func:`_sidecar_epoch`, shared with
+    :func:`incremental_ivf_ingest` (same schema
     ``(__id, run_id, batch_id)``, same NULL-``__id`` epoch-marker
     row per epoch, same ``<ids_path>__intent`` crash-marker store,
     same :func:`compact_ingest_ids` compaction and
@@ -1806,8 +1743,8 @@ def incremental_curation_ingest(
     column under a reserved ``batch_id = -1`` migration epoch, so
     already-curated keepers are never re-appended; legacy
     gate-rejects re-gate deterministically to rejection and are
-    remembered from their next delivery on.  Crash recovery follows
-    the IVF contract exactly: epoch
+    remembered from their next delivery on.  Crash recovery is the
+    shared protocol, with the curated store as ground truth: epoch
     in the sidecar → committed, replay no-op; epoch in the intent
     store only → the previous attempt crashed around the store
     append, recovery self-guards by anti-joining the STORE's id
@@ -1831,7 +1768,6 @@ def incremental_curation_ingest(
     the batch gate + filter + GROUP BY over the full corpus (the
     q218 oracle, graded on the sidecar path)."""
     from preql_spark.operators.text import GATES
-    from preql_spark.parquet_io import hadoop_dir_has_files
 
     if gate not in GATES:
         raise ValueError(f"unknown gate {gate!r}: "
@@ -1877,14 +1813,14 @@ def incremental_curation_ingest(
          .withColumn("batch_id", F.lit(-1).cast("long"))
          .coalesce(1).write.mode("append").parquet(ids_path))
 
-    def _store_seen(s: SparkSession) -> DataFrame | None:
-        if not hadoop_dir_has_files(s, store_path):
-            return None
-        # recovery must see files appended by a CRASHED previous
-        # attempt (possibly another process) — drop cached listings
-        s.catalog.refreshByPath(store_path)
-        return (s.read.parquet(store_path)
-                .select(F.col(id_col).alias("__seen")).distinct())
+    def _store(s: SparkSession) -> DataFrame | None:
+        return _read_if_any(s, store_path, refresh=True)
+
+    def _append(rows: DataFrame) -> None:
+        (gate_fn(rows, id_col=id_col, text_col=text_col, **gate_kwargs)
+         .filter(F.col("keep"))
+         .select(id_col, group_col, F.col(out_text).alias(text_col))
+         .write.mode("append").parquet(store_path))
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
@@ -1892,87 +1828,15 @@ def incremental_curation_ingest(
                 .dropDuplicates([id_col]))
         if ids_path is None:
             # legacy content-addressed path: the store is the memory
-            seen = _store_seen(s)
-            if seen is not None:
-                rows = rows.join(
-                    seen, rows[id_col] == seen["__seen"],
-                    "left_anti").drop("__seen")
-            gated = gate_fn(rows, id_col=id_col, text_col=text_col,
-                            **gate_kwargs)
-            (gated.filter(F.col("keep"))
-             .select(id_col, group_col,
-                     F.col(out_text).alias(text_col))
-             .write.mode("append").parquet(store_path))
-            return
-        this_epoch = ((F.col("run_id") == run_id)
-                      & (F.col("batch_id") == int(batch_id)))
-        ids = (s.read.parquet(ids_path)
-               if hadoop_dir_has_files(s, ids_path) else None)
-        if ids is not None and not ids.filter(this_epoch).isEmpty():
-            return   # epoch fully committed; checkpoint replay no-op
-        crashed = (hadoop_dir_has_files(s, intent_path)
-                   and not s.read.parquet(intent_path)
-                   .filter(this_epoch).isEmpty())
-        if not crashed:
-            # intent FIRST (see incremental_ivf_ingest)
-            # JVM-side one-row frame: createDataFrame(...).coalesce(1)
-            # costs seconds (one task evaluating every parent
-            # Python-RDD partition); range(1) writes one file in ms
-            (s.range(1)
-             .select(F.lit(run_id).alias("run_id"),
-                     F.lit(int(batch_id)).cast("long")
-                     .alias("batch_id"))
-             .write.mode("append").parquet(intent_path))
-            seen = (ids.select(F.col("__id").alias("__seen"))
-                    .distinct() if ids is not None else None)
-            if seen is not None:
-                rows = rows.join(
-                    seen, rows[id_col] == seen["__seen"],
-                    "left_anti").drop("__seen")
+            _append(_drop_seen(rows, id_col, _store(s)))
         else:
-            seen = _store_seen(s)   # recovery: store is ground truth
-            if seen is not None:
-                rows = rows.join(
-                    seen, rows[id_col] == seen["__seen"],
-                    "left_anti").drop("__seen")
-        all_ids = (batch.select(id_col).dropDuplicates([id_col])
-                   .select(F.col(id_col).alias("__id")))
-        # eager localCheckpoint, NOT persist: two actions follow
-        # (store append, then ids append) and in RECOVERY the
-        # anti-join reads the very store the first action appends to
-        # — a recomputed second action would anti-join the batch's
-        # own keepers away (the IVF lesson, crash-injection-pinned)
-        rows = rows.localCheckpoint(eager=True)
-        gated = gate_fn(rows, id_col=id_col, text_col=text_col,
-                        **gate_kwargs)
-        (gated.filter(F.col("keep"))
-         .select(id_col, group_col,
-                 F.col(out_text).alias(text_col))
-         .write.mode("append").parquet(store_path))
-        # sidecar rows: fast path writes the anti-join survivors
-        # (non-survivors are already sidecar rows); recovery writes
-        # the FULL deduped batch id set — keepers the crashed attempt
-        # appended are in the store but NOT in the sidecar, and
-        # gate-rejects were never anywhere.  Every epoch also writes
-        # one NULL-__id marker row so all-duplicate epochs stay
-        # sidecar-decidable (intent prunes to empty; NULL never
-        # equi-joins, so the dedup probe is blind to markers)
-        id_t = rows.schema[id_col].dataType
-        src_ids = (all_ids if crashed
-                   else rows.select(F.col(id_col).alias("__id")))
-        mark = src_ids.unionByName(
-            s.range(1).select(F.lit(None).cast(id_t).alias("__id")))
-        (mark
-         .withColumn("run_id", F.lit(run_id))
-         .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-         .coalesce(1).write.mode("append").parquet(ids_path))
+            # the store is the recovery ground truth for appended
+            # keepers; gate-rejects re-gate deterministically to
+            # rejection
+            _sidecar_epoch(s, rows, batch_id, ids_path, run_id, id_col,
+                           _store, _append)
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain(spark, src_path, checkpoint, schema, _sink)
 
     if not hadoop_dir_has_files(spark, store_path):
         # no batch ever ran (empty source): an empty report, not a
@@ -2012,36 +1876,27 @@ def incremental_distinct_ingest(
     fold-before-append ordering every ingest here follows, because
     foreachBatch actions re-resolve parquet listings per action);
     replayed batches contribute no pairs and no ids."""
-    from preql_spark.parquet_io import hadoop_dir_has_files
-
     _guard_stranded(spark, state_path, ids_path)
     schema = _source_schema(spark, src_path, checkpoint)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
-        if hadoop_dir_has_files(s, ids_path):
-            seen = (s.read.parquet(ids_path)
-                    .select(F.col(id_col).alias("__seen")).distinct())
-            batch = batch.join(
-                seen, batch[id_col] == seen["__seen"], "left_anti")
+        batch = _drop_seen(batch, id_col, _read_if_any(s, ids_path))
         batch = batch.persist()
-        pairs = (batch
-                 .select(F.col(group_col).alias("g"),
-                         F.expr(value_expr).cast("string").alias("v"))
-                 .filter(F.col("v").isNotNull()).distinct())
-        if hadoop_dir_has_files(s, state_path):
-            st = s.read.parquet(state_path)
-            pairs = pairs.join(st, ["g", "v"], "left_anti")
-        pairs.write.mode("append").parquet(state_path)
-        batch.select(id_col).write.mode("append").parquet(ids_path)
-        batch.unpersist(blocking=False)
+        try:
+            pairs = (batch
+                     .select(F.col(group_col).alias("g"),
+                             F.expr(value_expr).cast("string").alias("v"))
+                     .filter(F.col("v").isNotNull()).distinct())
+            if hadoop_dir_has_files(s, state_path):
+                st = s.read.parquet(state_path)
+                pairs = pairs.join(st, ["g", "v"], "left_anti")
+            pairs.write.mode("append").parquet(state_path)
+            batch.select(id_col).write.mode("append").parquet(ids_path)
+        finally:
+            batch.unpersist(blocking=False)
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain(spark, src_path, checkpoint, schema, _sink)
 
     return (spark.read.parquet(state_path)
             .groupBy(F.col("g").alias(group_col))
@@ -2072,56 +1927,35 @@ def incremental_hll_ingest(
     Idempotence — including the crash windows: the state is
     APPEND-ONLY per-batch sketch rows keyed by the micro-batch epoch
     id (stable across checkpoint replays) plus the checkpoint
-    lineage's run_id, guarded by a distributed anti-join on that key
-    — the same contract as the histogram / t-digest / frequent-items
-    siblings.  The previous overwrite-merged state had a crash
-    window: ``mode("overwrite")`` deletes the ONLY state copy before
-    the new file commits, so a crash inside the write silently lost
-    every prior wave's sketch while the ids append made the replay
-    look complete.  Append-only closes it: a batch re-delivered
-    after a crash between the state and ids appends rebuilds the
-    same rows, the (run_id, batch_id) guard drops them, and only the
-    ids append completes.  Nothing ever crosses the driver — batch
-    sketching, the guard, and the append all run distributed; the
-    report unions all wave rows per group (``hll_union_agg``)."""
-    from preql_spark.parquet_io import hadoop_dir_has_files
-
+    lineage's run_id, guarded by a distributed anti-join on that key —
+    the same contract as the histogram / t-digest / frequent-items
+    siblings (here the :func:`_epoch_fold` skeleton).  The previous
+    overwrite-merged state had a crash window: ``mode("overwrite")``
+    deletes the ONLY state copy before the new file commits, so a
+    crash inside the write silently lost every prior wave's sketch
+    while the ids append made the replay look complete.  Append-only
+    closes it: a batch re-delivered after a crash between the state
+    and ids appends rebuilds the same rows, the (run_id, batch_id)
+    guard drops them, and only the ids append completes.  Nothing ever
+    crosses the driver — batch sketching, the guard, and the append
+    all run distributed; the report unions all wave rows per group
+    (``hll_union_agg``)."""
     _guard_stranded(spark, state_path, ids_path)
     schema = _source_schema(spark, src_path, checkpoint)
     run_id = _ingest_run_id(spark, checkpoint)
 
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if hadoop_dir_has_files(s, ids_path):
-            seen = (s.read.parquet(ids_path)
-                    .select(F.col(id_col).alias("__seen")).distinct())
-            batch = batch.join(
-                seen, batch[id_col] == seen["__seen"], "left_anti")
-        batch = batch.persist()
-        sk = (batch.select(F.col(group_col).alias("g"),
-                           F.expr(value_expr).cast("string").alias("v"))
-              .filter(F.col("v").isNotNull())
-              .groupBy("g")
-              .agg(F.hll_sketch_agg("v", F.lit(int(lg_k)))
-                   .alias("sketch"))
-              .withColumn("batch_id",
-                          F.lit(int(batch_id)).cast("long"))
-              .withColumn("run_id", F.lit(run_id)))
-        if hadoop_dir_has_files(s, state_path):
-            st = _read_state(s, state_path, schema=sk.schema)
-            sk = sk.join(st.select("run_id", "batch_id").distinct(),
-                         ["run_id", "batch_id"], "left_anti")
-        # single-file epoch commit (see the histogram sibling)
-        sk.coalesce(1).write.mode("append").parquet(state_path)
-        batch.select(id_col).write.mode("append").parquet(ids_path)
-        batch.unpersist(blocking=False)
+    def _fold(batch: DataFrame) -> DataFrame:
+        return (batch.select(F.col(group_col).alias("g"),
+                             F.expr(value_expr).cast("string").alias("v"))
+                .filter(F.col("v").isNotNull())
+                .groupBy("g")
+                .agg(F.hll_sketch_agg("v", F.lit(int(lg_k)))
+                     .alias("sketch")))
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    # no in-batch dedup: a sketch union ignores repeated values
+    _drain(spark, src_path, checkpoint, schema,
+           _epoch_fold(state_path, ids_path, id_col, run_id, _fold,
+                       dedup=False))
 
     return (_read_state(spark, state_path)
             .filter(F.col("sketch").isNotNull())
@@ -2155,7 +1989,8 @@ def incremental_tdigest_ingest(
     Idempotence — including the crash windows: the state is
     APPEND-ONLY per-batch digest rows keyed by the micro-batch epoch
     id (stable across checkpoint replays), and every append is
-    guarded by a distributed anti-join on that key.  A batch
+    guarded by a distributed anti-join on that key (the
+    :func:`_epoch_fold` skeleton).  A batch
     re-delivered after a crash between the state append and the ids
     append re-builds the same rows, the batch_id anti-join drops
     them, and only the ids append completes — t-digest merge is NOT
@@ -2166,43 +2001,19 @@ def incremental_tdigest_ingest(
     long histories offline by rewriting the merged rows."""
     from preql_spark.operators.sketch import (tdigest, tdigest_merge,
                                               tdigest_quantiles)
-    from preql_spark.parquet_io import hadoop_dir_has_files
 
     _guard_stranded(spark, state_path, ids_path)
     schema = _source_schema(spark, src_path, checkpoint)
     run_id = _ingest_run_id(spark, checkpoint)
 
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if hadoop_dir_has_files(s, ids_path):
-            seen = (s.read.parquet(ids_path)
-                    .select(F.col(id_col).alias("__seen")).distinct())
-            batch = batch.join(
-                seen, batch[id_col] == seen["__seen"], "left_anti")
-        # in-batch duplicate ids would double-fold into the digest —
-        # dedup before sketching (the curation-ingest contract)
-        batch = batch.dropDuplicates([id_col]).persist()
-        vals = batch.select(F.col(group_col).alias("g"),
-                            F.expr(value_expr).cast("double")
-                            .alias("v"))
-        dig = tdigest(vals, "g", "v", delta=delta) \
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("long")) \
-            .withColumn("run_id", F.lit(run_id))
-        if hadoop_dir_has_files(s, state_path):
-            st = _read_state(s, state_path, schema=dig.schema)
-            dig = dig.join(st.select("run_id", "batch_id").distinct(),
-                           ["run_id", "batch_id"], "left_anti")
-        # single-file epoch commit (see the histogram sibling)
-        dig.coalesce(1).write.mode("append").parquet(state_path)
-        batch.select(id_col).write.mode("append").parquet(ids_path)
-        batch.unpersist(blocking=False)
+    def _fold(batch: DataFrame) -> DataFrame:
+        return tdigest(batch.select(F.col(group_col).alias("g"),
+                                    F.expr(value_expr).cast("double")
+                                    .alias("v")),
+                       "g", "v", delta=delta)
 
-    q = (spark.readStream.schema(schema).parquet(src_path)
-         .writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain(spark, src_path, checkpoint, schema,
+           _epoch_fold(state_path, ids_path, id_col, run_id, _fold))
 
     merged = tdigest_merge(
         _read_state(spark, state_path).filter(F.col("n") > 0)
@@ -2267,18 +2078,28 @@ def compact_ingest_state(spark: SparkSession, state_path: str,
                                             delta, capacity)
 
 
-def _compact_ingest_state_locked(spark: SparkSession, state_path: str,
-                                 kind: str, delta: float,
-                                 capacity: int | None) -> int:
-    st = _read_state(spark, state_path)
+def _lineage_carriers(st: DataFrame) -> tuple:
+    """The compactors' lineage rule over a guarded ingest state:
+    ``(top_run, top_bid, others)`` — the run holding the globally max
+    committed ``(batch_id, run_id)``, its max batch_id (the stamp of
+    the merged rows), and ``(run_id, max batch_id)`` of every OTHER
+    run, sorted by run_id (one carrier row each, so the epoch guard
+    still sees every run's high-water mark)."""
     tops = {r["run_id"]: int(r["mb"]) for r in
             st.groupBy("run_id")
               .agg(F.max("batch_id").alias("mb")).collect()}
     top_run = max(tops, key=lambda k: (tops[k], k))
-    top_bid = tops[top_run]
+    return (top_run, tops[top_run],
+            [(r, tops[r]) for r in sorted(tops) if r != top_run])
+
+
+def _compact_ingest_state_locked(spark: SparkSession, state_path: str,
+                                 kind: str, delta: float,
+                                 capacity: int | None) -> int:
+    st = _read_state(spark, state_path)
+    top_run, top_bid, others = _lineage_carriers(st)
     bid = F.lit(top_bid).cast("long").alias("batch_id")
     rid = F.lit(top_run).alias("run_id")
-    others = [(r, tops[r]) for r in sorted(tops) if r != top_run]
     g_type = (st.schema["g"].dataType.simpleString()
               if "g" in st.columns else None)
     if kind == "histogram":
@@ -2352,7 +2173,6 @@ def _checked_swap(spark: SparkSession, path: str, out: DataFrame,
     renames leaves the backup on disk, which every ingest detects
     LOUDLY (:func:`_guard_stranded`) with the rename-back recovery
     recipe.  Returns the rewrite's row count."""
-    from preql_spark.parquet_io import _hadoop_fs_path
     tmp = path.rstrip("/") + "__compact"
     bak = path.rstrip("/") + "__pre_compact"
     if partition_col is not None and max_file_rows is not None:
@@ -2450,7 +2270,6 @@ def compact_ingest_ids(spark: SparkSession, ids_path: str) -> int:
     RUN ONLY WHILE THE STREAM IS STOPPED — enforced mechanically
     in-session (:func:`_require_no_active_streams`), like
     :func:`compact_ingest_state`."""
-    from preql_spark.parquet_io import hadoop_dir_has_files
     intent_path = ids_path.rstrip("/") + "__intent"
     _require_no_active_streams(spark, "compact_ingest_ids")
     _guard_stranded(spark, ids_path, intent_path)
@@ -2493,17 +2312,12 @@ def compact_datacard_state(spark: SparkSession, state_path: str,
     _guard_stranded(spark, state_path)
     with _compaction_lock(spark, state_path):
         st = _read_state(spark, state_path)
-        tops = {r["run_id"]: int(r["mb"]) for r in
-                st.groupBy("run_id")
-                  .agg(F.max("batch_id").alias("mb")).collect()}
-        top_run = max(tops, key=lambda k: (tops[k], k))
+        top_run, top_bid, others = _lineage_carriers(st)
         out = (st.filter(F.col(mc[0]).isNotNull())
                .groupBy(*[F.col(c) for c in gc])
                .agg(*[F.sum(m).alias(m) for m in mc])
-               .withColumn("batch_id",
-                           F.lit(tops[top_run]).cast("long"))
+               .withColumn("batch_id", F.lit(top_bid).cast("long"))
                .withColumn("run_id", F.lit(top_run)))
-        others = [(r, tops[r]) for r in sorted(tops) if r != top_run]
         if others:
             gt = {f.name: f.dataType.simpleString()
                   for f in st.schema.fields}

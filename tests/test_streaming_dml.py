@@ -2430,3 +2430,32 @@ def test_source_schema_pin_atomic_and_recoverable(spark, tmp_path):
     got4 = _source_schema(spark, "/nonexistent/never/read", ck2,
                           schema=drifted)
     assert got4 == handed
+
+
+@pytest.mark.parametrize("ingest", ["quantile", "gate_rate"])
+def test_raising_sink_leaves_no_cache(spark, eng, tmp_path, ingest):
+    """A fold that raises at run time, after the sink has persisted
+    its batch, fails the ingest loudly and leaves nothing registered:
+    the CacheManager is empty and no persistent RDD is added."""
+    from pyspark.errors import StreamingQueryException
+
+    from preql_spark.streaming.stream import (
+        incremental_gate_rate_ingest, incremental_quantile_ingest)
+    src, st, ids, ck = (str(tmp_path / x)
+                        for x in ("src", "st", "ids", "ck"))
+    eng.t.documents.df.select("doc_id", "source", "text") \
+        .write.mode("overwrite").parquet(src)
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    rdds_before = set(jsc.getPersistentRDDs().keySet())
+    boom = "raise_error('boom')"
+    with pytest.raises(StreamingQueryException, match="boom"):
+        if ingest == "quantile":
+            incremental_quantile_ingest(spark, src, ck, st, ids,
+                                        value_expr=boom)
+        else:
+            incremental_gate_rate_ingest(spark, src, ck, st, ids,
+                                         gate="gopher",
+                                         min_words=F.expr(boom))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert set(jsc.getPersistentRDDs().keySet()) <= rdds_before

@@ -1,12 +1,16 @@
 """Capture ``explain("formatted")`` for bench queries into
-``plans/r15/<query>_<tag>.txt`` (tag = before / after).
+``plans/<round>/<query>_<tag>.txt`` (tag = before / after).
 
-Usage: python tools/capture_plans_r15.py <tag> [sf_dir] [query ...]
+Usage: python tools/capture_plans.py <round> <tag> [sf_dir] [query ...]
 
-AQE is left ON (the production/bench setting); the formatted explain
-then shows the initial plan under AdaptiveSparkPlan — exchange count,
-join strategy, PushedFilters/ReadSchema and Python-boundary nodes are
-all visible, which is what the r15 before/after evidence needs.
+``sf_dir`` defaults to ``$SPARK_GRAFT_SF_DIR`` (the bench.py variable).
+
+e.g. ``python tools/capture_plans.py r15 before`` writes
+``plans/r15/*_before.txt``.  AQE is left ON (the production/bench
+setting); the formatted explain then shows the initial plan under
+AdaptiveSparkPlan — exchange count, join strategy,
+PushedFilters/ReadSchema and Python-boundary nodes are all visible,
+which is what before/after plan evidence needs.
 """
 
 from __future__ import annotations
@@ -18,19 +22,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    only = set(sys.argv[3:])
+    sf_dir = (sys.argv[3] if len(sys.argv) > 3
+              else os.environ.get("SPARK_GRAFT_SF_DIR"))
+    if len(sys.argv) < 3 or not sf_dir:
+        sys.exit(__doc__)
+    rnd, tag = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[4:])
 
     import __spark_entry__ as entry
     from bench import BENCH_QUERIES
     from preql_spark.engine import default_session
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r15")
+        os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = default_session("capture_plans_r15")
+    spark = default_session(f"capture_plans_{rnd}")
     qs = entry.queries()
     names = [n for n in BENCH_QUERIES if not only or n in only] or sorted(only)
     for name in names:
