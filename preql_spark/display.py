@@ -2,12 +2,14 @@
 renderer (``preql/core/display.py``, 312 LoC: ``table_repr``,
 ``_rich_table``, ``_html_table``, ``_preview_table``, ``table_more``).
 
-Everything here is bounded for 100 TB tables: the row count is taken
-over ``limit(MAX_AUTO_COUNT)`` and rendered ``>=N`` when it saturates
-(reference ``MAX_AUTO_COUNT`` / ``count_str``), previews fetch
-``offset+size`` rows only, and nothing ever collects an unbounded
-result.  Dependency-free: text tables are drawn with box characters,
-HTML mirrors the reference's ``preql_table`` markup for notebooks
+Everything here is bounded for 100 TB tables: a cell is one Spark
+action, a collect of the ``size + 1`` preview rows after ``offset``.
+Fewer than ``size + 1`` rows back means the count is exact, so the
+row count over ``limit(MAX_AUTO_COUNT)`` (reference ``MAX_AUTO_COUNT``
+/ ``count_str``, rendered ``>=N`` when it saturates) runs only when
+the preview saturates, and nothing ever collects an unbounded result.
+Dependency-free: text tables are drawn with box characters, HTML
+mirrors the reference's ``preql_table`` markup for notebooks
 (``Table._repr_html_`` hooks it into Jupyter).
 """
 
@@ -114,11 +116,22 @@ def html_table(name: str, count_str: str, rows: list[dict],
 
 
 def table_repr(table, offset: int = 0, fmt: str = "text") -> str:
-    """Reference ``table_repr``: bounded count + preview + renderer
-    dispatch (text | html)."""
-    count, count_str = bounded_count(table)
+    """Reference ``table_repr``: preview + count + renderer dispatch
+    (text | html), in one collect of ``size + 1`` rows.  The extra row
+    tells a full page from the whole rest of the table: below it the
+    count is ``offset + rows`` exactly, and :func:`bounded_count` runs
+    only when the preview saturates, when nothing came back past a
+    non-zero ``offset``, or when the count would reach
+    ``MAX_AUTO_COUNT``."""
     size = PREVIEW_HTML if fmt == "html" else PREVIEW_SHELL
-    rows = preview_rows(table, size, offset)
+    rows = preview_rows(table, size + 1, offset)
+    if (len(rows) > size or (offset and not rows)
+            or offset + len(rows) >= MAX_AUTO_COUNT):
+        rows = rows[:size]
+        count, count_str = bounded_count(table)
+    else:
+        count = offset + len(rows)
+        count_str = f"={count}"
     has_more = offset + len(rows) < count
     name = getattr(getattr(table, "meta", None), "name", "") or ""
     if name == "anon":

@@ -307,6 +307,7 @@ class Engine:
         empty-list default."""
         if not values:
             return self.from_df(self.spark.createDataFrame([], "item long"))
+        # list_/rows: Spark's list inference (int+float raises), not Arrow's
         df = self.spark.createDataFrame([(v,) for v in values], ["item"])
         return self.from_df(df)
 

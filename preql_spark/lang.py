@@ -2769,8 +2769,9 @@ def _names_table(parser: "Parser", obj=None) -> Table:
     else:
         raise LangSignal("TypeError", "names() expects a table")
     rows = sorted(set(rows))
-    df = parser.engine.spark.createDataFrame(
-        rows, "name string, type string, doc string")
+    from preql_spark.sources.mutable import _local_frame
+    df = _local_frame(parser.engine.spark, rows,
+                      "name string, type string, doc string")
     return Table(parser.engine, df, TableMeta("names"))
 
 
@@ -2930,12 +2931,10 @@ def _apply_function_inner(parser: Parser, name: str, args, kwargs):
     if name == "env_vars":
         # pql_env_vars (pql_functions.py:820-828): (name, value) table
         import os as _os
+        from preql_spark.sources.mutable import _local_frame
         rows = [(k, v) for k, v in _os.environ.items()]
-        df = parser.engine.spark.createDataFrame(
-            rows or [("", "")], "name string, value string")
-        if not rows:
-            df = df.limit(0)
-        return parser.engine.from_df(df)
+        return parser.engine.from_df(_local_frame(
+            parser.engine.spark, rows, "name string, value string"))
     if name == "get_db_type":
         # pql_get_db_type (pql_functions.py:351-359) — ours is spark
         return "spark"
@@ -3126,12 +3125,11 @@ def _apply_function_inner(parser: Parser, name: str, args, kwargs):
         return _help_text(parser, args[0] if args else None)
     if name == "tables":
         from preql_spark.engine import TableMeta
+        from preql_spark.sources.mutable import _local_frame
         rows = [(n, "table") for n in sorted(
             set(parser.engine.tables()) | set(parser.engine.mutables))]
-        df = parser.engine.spark.createDataFrame(
-            rows or [("", "")], "name string, type string")
-        if not rows:
-            df = df.limit(0)
+        df = _local_frame(parser.engine.spark, rows,
+                          "name string, type string")
         return Table(parser.engine, df, TableMeta("tables"))
 
     # ---- SQL() escape hatch (pql_functions.py:86-123) --------------

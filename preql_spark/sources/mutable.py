@@ -35,9 +35,46 @@ import shutil
 import threading
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import (Column, DataFrame, Observation, Row, SparkSession,
+                         Window)
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _local_frame(spark: SparkSession, rows: list,
+                 schema: T.StructType | str) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order; a DDL string or a
+    ``StructType``) as a ``LocalRelation``.
+    ``createDataFrame(list, schema)`` builds a Python RDD in classic
+    PySpark, so every action on it runs a Python-worker job; an Arrow
+    table becomes a ``LocalRelation`` whose collect runs none.  The
+    values first pass Spark's own verifier (same ``PySparkTypeError``
+    for a wrong-typed value), then Spark Connect's list-to-Arrow
+    conversion, which keeps classic's value semantics (naive
+    timestamps as local time, decimal rounding, nested types)."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    table = (LocalDataToArrowConversion.convert(rows, schema, False)
+             if rows else to_arrow_schema(schema).empty_table())
+    return spark.createDataFrame(table, schema)
+
+
+def _observed_n(obs: Observation, recount) -> int:
+    """The ``n`` metric ``obs`` carried through a write, or
+    ``recount()`` when the optimizer pruned the observation with its
+    subtree: a delete predicate that folds to TRUE turns the kept-rows
+    filter into an empty relation, and ``obs.get`` then fails."""
+    try:
+        return obs.get["n"]
+    except Py4JJavaError:
+        return recount()
 
 
 def _assign_ids(df: DataFrame, id_col: str, base: int) -> DataFrame:
@@ -108,7 +145,7 @@ class MutableTable:
         # __builtins__.pql:176-189): creation state is the implicit
         # first commit point; GC never collects the marked version
         self._mark: int = 0
-        # driver-side caches, both owned by the same single-writer
+        # driver-side caches, all owned by the same single-writer
         # lock as the version lineage: the resolved reader handle for
         # the current version (a parquet read re-resolves the footer
         # on every df() call — ~0.2 s of driver work that the DML
@@ -116,10 +153,16 @@ class MutableTable:
         # (saves a full-table max(id) job per insert; at scale that
         # job reads every footer).  Invalidated on every version
         # change; the watermark is maintained exactly only on the
-        # insert_rows path, where the batch is a local list.
+        # insert_rows path, where the batch is a local list.  Third,
+        # the schema the first read inferred: a reader without one
+        # runs a one-task footer job per version, a reader with one
+        # none.  It survives writes whose (name, type) list equals it
+        # and is dropped by any other write (the unionByName widening
+        # path) and by rollback.
         self._df_cache: DataFrame | None = None
         self._df_cache_key: tuple | None = None
         self._max_id_cache: int | None = None
+        self._schema: T.StructType | None = None
         os.makedirs(self.root, exist_ok=True)
 
     # ---- versioning ------------------------------------------------
@@ -160,11 +203,7 @@ class MutableTable:
             nparts = max(1, -(-self._table_bytes() // self._TARGET_FILE_BYTES))
             df = df.coalesce(nparts)
         df.write.mode("overwrite").parquet(target)
-        # version changed: drop the cached reader handle (version
-        # numbers can be REUSED after a transaction rollback, so a
-        # path-keyed cache alone would serve deleted files)
-        self._df_cache = None
-        self._df_cache_key = None
+        self._written(df.schema)
         # retain the latest four versions: lazily-held reader handles
         # (df() is lazy) must survive a few subsequent writes before
         # they execute (real deployments use Delta/Iceberg snapshot
@@ -176,6 +215,19 @@ class MutableTable:
                     continue           # rollback target stays restorable
                 shutil.rmtree(os.path.join(self.root, f"v{v}"),
                               ignore_errors=True)
+
+    def _written(self, schema: T.StructType) -> None:
+        """A write of ``schema``-typed rows landed in the current
+        version: drop the cached reader handle (version numbers can be
+        REUSED after a transaction rollback, so a path-keyed cache
+        alone would serve deleted files), and the kept schema unless
+        the write's (name, type) list equals it."""
+        self._df_cache = None
+        self._df_cache_key = None
+        if self._schema is not None and (
+                [(f.name, f.dataType) for f in schema.fields]
+                != [(f.name, f.dataType) for f in self._schema.fields]):
+            self._schema = None
 
     # ---- DDL -------------------------------------------------------
     @classmethod
@@ -217,7 +269,11 @@ class MutableTable:
                 raise ValueError(f"table {self.name} has no data")
             if self._df_cache is not None and self._df_cache_key == path:
                 return self._df_cache
-            out = self.spark.read.parquet(path)
+            if self._schema is None:
+                out = self.spark.read.parquet(path)
+                self._schema = out.schema
+            else:
+                out = self.spark.read.schema(self._schema).parquet(path)
             self._df_cache, self._df_cache_key = out, path
             return out
 
@@ -287,8 +343,7 @@ class MutableTable:
                                tmp)
                 os.rename(tmp,
                           os.path.join(cur_path, f"append-{tag}.parquet"))
-                self._df_cache = None
-                self._df_cache_key = None
+                self._written(schema)
                 return
             except Exception:
                 pass   # fall through to the Spark writer
@@ -309,8 +364,7 @@ class MutableTable:
                 os.rename(os.path.join(tmpdir, f),
                           os.path.join(cur_path, f"append-{tag}-{f}"))
         shutil.rmtree(tmpdir, ignore_errors=True)
-        self._df_cache = None
-        self._df_cache_key = None
+        self._written(df.schema)
 
     @_locked
     def insert_rows(self, rows: list[dict]) -> list[Row]:
@@ -318,7 +372,8 @@ class MutableTable:
         time and flags it "very inefficient", evaluate.py:841).  Ids
         are assigned driver-side by enumeration: the input IS a local
         Python list, so this costs zero Spark jobs and preserves the
-        reference's insertion-order id sequence."""
+        reference's insertion-order id sequence.  On the append path
+        the whole statement starts no Spark job."""
         cur = self.df()
         base = self._next_id_base(cur)
         data_schema = T.StructType(
@@ -326,9 +381,11 @@ class MutableTable:
         full_schema = T.StructType(
             [T.StructField(self.id_col, T.LongType(), False)]
             + list(data_schema.fields))
-        # the batch is a LocalRelation: collect() is pure driver-side
-        # (no job) and runs Spark's own type verification/coercion
-        batch = self.spark.createDataFrame(
+        # the batch is a LocalRelation (verified driver-side, built
+        # from Arrow): collect() is pure driver-side (no job) and
+        # returns Spark's coerced values
+        batch = _local_frame(
+            self.spark,
             [(base + i, *(r.get(f.name) for f in data_schema.fields))
              for i, r in enumerate(rows)],
             full_schema)
@@ -373,20 +430,25 @@ class MutableTable:
                **sets) -> int:
         """``t[conds] update {col: expr}`` — copy-on-write MERGE shape.
         Returns the number of updated rows (rows where ``cond`` is
-        TRUE; NULL predicates update nothing, like SQL).  Pass
-        ``count=False`` to skip the extra count job on large tables
-        (returns -1).  ``_cur`` lets a caller that built ``cond``
-        against a specific read of the table pass that exact DataFrame
-        (column expressions resolve by attribute id in Spark)."""
+        TRUE; NULL predicates update nothing, like SQL), counted by an
+        ``Observation`` that rides on the version write, so no extra
+        job runs.  ``count=False`` attaches none and returns -1.
+        ``_cur`` lets a caller that built ``cond`` against a specific
+        read of the table pass that exact DataFrame (column
+        expressions resolve by attribute id in Spark)."""
         cur = _cur if _cur is not None else self.df()
-        n = cur.filter(cond).count() if count else -1
-        updated = cur.withColumns(
+        src = cur
+        if count:
+            obs = Observation()
+            src = cur.observe(obs, F.count_if(cond).alias("n"))
+        updated = src.withColumns(
             {k: F.when(cond, v if isinstance(v, Column) else F.lit(v))
              .otherwise(F.col(k)) for k, v in sets.items()})
         self._write_version(updated, compact=True)
         if self.id_col in sets:
             self._max_id_cache = None
-        return n
+        return (_observed_n(obs, lambda: cur.filter(cond).count())
+                if count else -1)
 
     @_locked
     def merge(self, src: DataFrame, on: list[str] | str,
@@ -447,26 +509,35 @@ class MutableTable:
         """``t delete [conds]`` — filtered overwrite.  Deletes only
         rows where the predicate is TRUE: rows where it evaluates NULL
         are KEPT (``~cond`` alone would drop them — NULL negated is
-        NULL), matching SQL/reference DELETE.  Returns rows deleted;
-        ``count=False`` skips the extra count job (returns -1)."""
+        NULL), matching SQL/reference DELETE.  Returns rows deleted,
+        counted by an ``Observation`` on the rewrite (no extra job);
+        ``count=False`` attaches none and returns -1."""
         cur = _cur if _cur is not None else self.df()
         hit = cond if isinstance(cond, Column) else F.expr(cond)
-        n = cur.filter(hit).count() if count else -1
-        self._write_version(cur.filter(~hit.eqNullSafe(True)), compact=True)
+        kill = hit.eqNullSafe(True)
+        src = cur
+        if count:
+            obs = Observation()
+            src = cur.observe(obs, F.count_if(kill).alias("n"))
+        self._write_version(src.filter(~kill), compact=True)
         # deleting the max-id row must re-open its id for reuse
         # (max(id)+1 semantics) — recompute lazily
         self._max_id_cache = None
-        return n
+        return (_observed_n(obs, lambda: cur.filter(hit).count())
+                if count else -1)
 
 
 def _rollback_to(t: MutableTable, version: int | None) -> None:
-    for v in t._versions():
-        if version is None or v > version:
-            shutil.rmtree(os.path.join(t.root, f"v{v}"), ignore_errors=True)
-    # current version changed out from under the caches
-    t._df_cache = None
-    t._df_cache_key = None
-    t._max_id_cache = None
+    with t._lock:
+        for v in t._versions():
+            if version is None or v > version:
+                shutil.rmtree(os.path.join(t.root, f"v{v}"),
+                              ignore_errors=True)
+        # current version changed out from under the caches
+        t._df_cache = None
+        t._df_cache_key = None
+        t._max_id_cache = None
+        t._schema = None
 
 
 def _gc(t: MutableTable) -> None:

@@ -15,6 +15,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from preql_spark.parquet_io import (_hadoop_fs_path, _jpath_cls,
                                     hadoop_dir_has_files)
@@ -248,19 +249,23 @@ def _drain(spark: SparkSession, src_path: str, checkpoint: str, schema,
 
 
 def _read_if_any(s: SparkSession, path: str, depth: int = 0,
-                 refresh: bool = False) -> DataFrame | None:
+                 refresh: bool = False,
+                 schema: T.StructType | None = None) -> DataFrame | None:
     """The parquet store at ``path``, or None while it has no files
     (``depth=1`` for a partitioned store).  ``refresh`` drops cached
     file listings first: a recovery read must see files appended by a
     CRASHED previous attempt — possibly another process, or an
     earlier in-session try whose write did not route through this
     session's cache invalidation — or its anti-join silently misses
-    them."""
+    them.  ``schema``, when the caller already knows the columns it
+    needs and their types, reads just those columns without the
+    one-task footer job that schema inference runs per read."""
     if not hadoop_dir_has_files(s, path, depth=depth):
         return None
     if refresh:
         s.catalog.refreshByPath(path)
-    return s.read.parquet(path)
+    reader = s.read if schema is None else s.read.schema(schema)
+    return reader.parquet(path)
 
 
 def _drop_seen(frame: DataFrame, key: str, store: DataFrame | None,
@@ -1827,8 +1832,11 @@ def incremental_curation_ingest(
         rows = (batch.select(id_col, group_col, text_col)
                 .dropDuplicates([id_col]))
         if ids_path is None:
-            # legacy content-addressed path: the store is the memory
-            _append(_drop_seen(rows, id_col, _store(s)))
+            # legacy content-addressed path: the store is the memory;
+            # its id column is typed by the source, so no inference
+            _append(_drop_seen(rows, id_col, _read_if_any(
+                s, store_path, refresh=True,
+                schema=T.StructType([schema[id_col]]))))
         else:
             # the store is the recovery ground truth for appended
             # keepers; gate-rejects re-gate deterministically to
@@ -1838,13 +1846,19 @@ def incremental_curation_ingest(
 
     _drain(spark, src_path, checkpoint, schema, _sink)
 
-    if not hadoop_dir_has_files(spark, store_path):
+    # the report's two columns, typed without inference: the group as
+    # the source has it, the text a string when the gate rewrites it
+    store = _read_if_any(spark, store_path, schema=T.StructType([
+        schema[group_col],
+        T.StructField(text_col, T.StringType() if out_col
+                      else schema[text_col].dataType)]))
+    if store is None:
         # no batch ever ran (empty source): an empty report, not a
         # missing-store read error
         return spark.createDataFrame(
             [], f"{group_col} string, n_docs bigint, "
                 "total_chars bigint")
-    return (spark.read.parquet(store_path)
+    return (store
             .groupBy(F.col(group_col))
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum(F.length(text_col)).alias("total_chars")))

@@ -1,4 +1,6 @@
 import os
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import pytest
 
@@ -24,3 +26,33 @@ def spark():
 @pytest.fixture(scope="session")
 def eng(spark):
     return Engine(spark).load_dir(SF_DIR)
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` sets ``jobs.n`` to the number
+    of Spark jobs started inside the block.  Job ids are sequential:
+    read after the listener bus drains, the status store knows the
+    last id at entry, and the ids it has past that are the block's."""
+    from py4j.protocol import Py4JJavaError
+    sc = spark.sparkContext._jsc.sc()
+    bus, store = sc.listenerBus(), sc.statusStore()
+
+    @contextmanager
+    def count():
+        bus.waitUntilEmpty()
+        jobs = store.jobsList(None)
+        first = (max(jobs.head().jobId(), jobs.last().jobId()) + 1
+                 if jobs.size() else 0)
+        out = SimpleNamespace(n=None)
+        yield out
+        bus.waitUntilEmpty()
+        nxt = first
+        while True:
+            try:
+                store.job(nxt)
+            except Py4JJavaError:       # no such job: none started yet
+                break
+            nxt += 1
+        out.n = nxt - first
+    return count

@@ -178,6 +178,84 @@ def test_display_surface(eng):
     assert display.table_inline_repr(eng.t.region, 2).startswith("[{")
 
 
+def _two_action_repr(table, total, offset=0, fmt="text"):
+    """The previous ``display.table_repr``: a bounded count (passed in
+    as ``total``, one per table), then a separate preview collect —
+    kept as the golden reference."""
+    from preql_spark import display
+    count, count_str = total
+    size = display.PREVIEW_HTML if fmt == "html" else display.PREVIEW_SHELL
+    rows = display.preview_rows(table, size, offset)
+    has_more = offset + len(rows) < count
+    name = getattr(getattr(table, "meta", None), "name", "") or ""
+    if name == "anon":
+        name = ""
+    f = display.html_table if fmt == "html" else display.text_table
+    return f(name, count_str, rows, offset, has_more)
+
+
+def test_table_repr_one_action_golden_grid(spark, monkeypatch):
+    """One collect per cell renders byte-identically to the two-action
+    form for every (n, offset, fmt) edge, and the bounded count runs
+    only when the preview cannot settle it: a saturated preview, an
+    empty page past a non-zero offset, or the MAX_AUTO_COUNT ceiling."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from preql_spark import display
+    e = Engine(spark)
+    real_count = DataFrame.count
+    calls = []
+
+    def counted(self):
+        calls.append(1)
+        return real_count(self)
+
+    for fmt, size in (("text", display.PREVIEW_SHELL),
+                      ("html", display.PREVIEW_HTML)):
+        for n in (0, 1, size, size + 1, 10_050):
+            df = spark.range(n, numPartitions=1).select(
+                "id", (F.col("id") * 0.5).alias("x"),
+                F.concat(F.lit("<r"), F.col("id").cast("string"),
+                         F.lit(">")).alias("s"))
+            t = e.register("nums", df) if n == 1 else e.from_df(df)
+            total = display.bounded_count(t)
+            for offset in (0, 3, n + 5):
+                want = _two_action_repr(t, total, offset, fmt)
+                calls.clear()
+                with monkeypatch.context() as m:
+                    m.setattr(DataFrame, "count", counted)
+                    got = display.table_repr(t, offset, fmt)
+                assert got == want, (n, offset, fmt)
+                back = min(max(n - offset, 0), size + 1)
+                settles = not (back > size or (offset and not back)
+                               or offset + back >= display.MAX_AUTO_COUNT)
+                assert len(calls) == (0 if settles else 1), (n, offset, fmt)
+
+
+def test_table_repr_unsaturated_cell_runs_no_count(eng, monkeypatch,
+                                                   spark_jobs):
+    """A cell whose preview holds the whole result is one Spark action:
+    no ``DataFrame.count``, and an aggregate cell's jobs are only its
+    collect's."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from preql_spark import display
+
+    def no_count(self):
+        raise AssertionError("table_repr ran a count")
+
+    cell = eng.q("region{n: count(r_regionkey)}")
+    cell.df.collect()                        # warm: plan + codegen
+    with spark_jobs() as alone:
+        cell.df.limit(display.PREVIEW_HTML + 1).collect()
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "count", no_count)
+        with spark_jobs() as jobs:
+            h = display.table_repr(cell, fmt="html")
+        assert display.table_repr(eng.t.region).splitlines()[0] \
+            == "table region =5"
+    assert "<pre>table region =1</pre>" in h and "<td>5</td>" in h
+    assert jobs.n == alone.n
+
+
 def test_serve_rest(eng):
     """Reference serve_rest parity (pql_functions.py:985-1040) on the
     stdlib server: route listing, table pages (bounded), function

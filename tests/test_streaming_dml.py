@@ -1,6 +1,7 @@
 """Streaming windows (availableNow micro-batch) + mutable-table DML."""
 
 import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -269,6 +270,125 @@ def test_delete_null_predicate_keeps_rows(spark, tmp_path):
     # count=False skips the count job
     assert t.delete(F.col("v") == 3, count=False) == -1
     assert t.df().count() == 1
+    # UPDATE likewise touches (and counts) only TRUE rows; both counts
+    # ride on the version write, so no count() runs
+    u = MutableTable.create(spark, "un", str(tmp_path), "v long, w long")
+    u.insert_rows([{"v": 1, "w": 0}, {"v": None, "w": 0}, {"v": 3, "w": 0}])
+    with _no_count():
+        assert u.update(F.col("v") == 3, w=F.lit(9)) == 1
+        assert u.update(F.col("v") > 5, w=F.lit(7)) == 0
+        assert u.delete(F.col("v") == 1) == 1
+    assert sorted(((r.v if r.v is not None else -99), r.w)
+                  for r in u.df().collect()) == [(-99, 0), (3, 9)]
+
+
+@contextmanager
+def _no_count():
+    """Classic ``DataFrame.count`` raises inside the block."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    def no_count(self):
+        raise AssertionError("ran a count job")
+
+    real = DataFrame.count
+    DataFrame.count = no_count
+    try:
+        yield
+    finally:
+        DataFrame.count = real
+
+
+def test_update_delete_counts_ride_on_the_write(spark, tmp_path,
+                                                 monkeypatch):
+    """``update``/``delete`` return today's counts (NULL predicates
+    count nothing) from an Observation on the version write, with no
+    count job; ``count=False`` attaches no observation; a delete
+    predicate the optimizer folds to TRUE still counts every row."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    t = MutableTable.create(spark, "uc", str(tmp_path), "k long, v long")
+    rows = [{"k": (None if i == 7 else i), "v": i} for i in range(40)]
+    t.insert_rows(rows)
+    ks = [r["k"] for r in rows]
+    with _no_count():
+        n_u = t.update(F.col("k") % 3 == 0, v=F.col("v") + 100)
+        n_d = t.delete(F.col("k") % 4 == 1)
+    assert n_u == sum(1 for k in ks if k is not None and k % 3 == 0)
+    assert n_d == sum(1 for k in ks if k is not None and k % 4 == 1)
+    got = {(r.k, r.v) for r in t.df().collect()}
+    assert got == {(k, i + (100 if k is not None and k % 3 == 0 else 0))
+                   for i, k in enumerate(ks)
+                   if k is None or k % 4 != 1}
+
+    def no_observe(self, *a, **kw):
+        raise AssertionError("count=False attached an observation")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "observe", no_observe)
+        assert t.update(F.col("k") == 0, count=False, v=F.lit(0)) == -1
+        assert t.delete(F.col("k") == 0, count=False) == -1
+    left = len(got) - 1
+    assert t.delete(F.lit(1) == 1) == left
+    assert t.df().collect() == []
+
+
+def test_insert_rows_local_batch_starts_no_job(spark, tmp_path,
+                                               spark_jobs):
+    """The ``insert_rows`` batch is a LocalRelation: on the append path
+    the statement starts no Spark job, its returned Rows equal what
+    ``createDataFrame(list, schema)`` collects, and a wrong-typed value
+    raises Spark's own ``PySparkTypeError``."""
+    import datetime
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql import types as T
+    ddl = ("a long, b int, c double, d float, s string, f boolean, "
+           "dt date")
+    t = MutableTable.create(spark, "ir", str(tmp_path), ddl)
+    t.insert_rows([{"a": 0}])          # copy-on-write: opens v1
+    batch = [dict(a=1, b=2, c=0.1, d=0.1, s="x", f=True,
+                  dt=datetime.date(2020, 1, 2)),
+             dict(a=None, b=None, c=None, d=None, s=None, f=None,
+                  dt=None),
+             dict(a=-5, b=7, c=1e300, d=3.5, s="ü", f=False,
+                  dt=datetime.date(1999, 12, 31))]
+    with spark_jobs() as jobs:
+        out = t.insert_rows(batch)
+    assert jobs.n == 0
+    schema = T.StructType([T.StructField("id", T.LongType(), False)]
+                          + list(T.StructType.fromDDL(ddl).fields))
+    want = spark.createDataFrame(
+        [(2 + i, *r.values()) for i, r in enumerate(batch)],
+        schema).collect()
+    assert out == want and [r.asDict() for r in out] \
+        == [r.asDict() for r in want]
+    assert sorted(t.df().collect(), key=lambda r: r.id)[1:] == want
+    with pytest.raises(PySparkTypeError):
+        t.insert_rows([{"a": 1, "b": "two"}])
+    assert t.df().count() == 4
+
+
+def test_df_after_write_reads_no_footer(spark, tmp_path, spark_jobs):
+    """``df()`` reads each new version with the schema it already
+    inferred (no footer job), follows a widening ``insert_from`` and
+    goes back with a ``transaction`` rollback."""
+    from pyspark.sql import types as T
+    from preql_spark.sources.mutable import transaction
+    t = MutableTable.create(spark, "sc", str(tmp_path), "v int")
+    t.insert_rows([{"v": 1}, {"v": 2}])
+    t.update(F.col("v") == 2, v=F.lit(5))
+    with spark_jobs() as jobs:
+        d = t.df()
+    assert jobs.n == 0
+    assert sorted(r.v for r in d.collect()) == [1, 5]
+    t.insert_from(spark.createDataFrame([(2 ** 40,)], "v long"))
+    assert t.df().schema["v"].dataType == T.LongType()
+    assert sorted(r.v for r in t.df().collect()) == [1, 5, 2 ** 40]
+    with pytest.raises(RuntimeError):
+        with transaction(t):
+            t.insert_from(spark.createDataFrame([(1.5,)], "v double"))
+            assert t.df().schema["v"].dataType == T.DoubleType()
+            raise RuntimeError("abort")
+    assert t.df().schema["v"].dataType == T.LongType()
+    assert sorted(r.v for r in t.df().collect()) == [1, 5, 2 ** 40]
 
 
 def test_merge_duplicate_source_raises(spark, tmp_path):
@@ -1816,6 +1936,39 @@ def test_gate_fingerprint_guard_columns_and_partial(spark, eng,
         incremental_gate_rate_ingest(
             spark, src, str(base / "ck2"), st, ids, gate="classifier",
             scorer=functools.partial(scaled_scorer, scale=500.0))
+
+
+def test_curation_wave_reads_store_without_inference(spark, tmp_path,
+                                                     spark_jobs):
+    """A legacy-path curation wave reads its store twice, for the ids
+    anti-join and for the report, each typed by the source schema, so
+    neither runs a footer-inference job: a wave with its report
+    collect starts 6 jobs (8 with inference)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from preql_spark.streaming.stream import incremental_curation_ingest
+    src, store, ck = (str(tmp_path / x) for x in ("src", "store", "ck"))
+    os.makedirs(src)
+    good = "the quick brown fox jumps over {}."
+
+    def wave(w):
+        ids = list(range(w * 30, w * 30 + 30))
+        text = ["\n".join([good.format(i)] * (3 if i % 2 else 1)
+                          + ["too short."]) for i in ids]
+        pq.write_table(pa.table({
+            "doc_id": pa.array(ids, pa.int64()),
+            "source": [f"s{i % 3}" for i in ids], "text": text}),
+            os.path.join(src, f"w{w}.parquet"))
+        return incremental_curation_ingest(spark, src, ck, store,
+                                           gate="c4").collect()
+
+    wave(0)
+    with spark_jobs() as jobs:
+        rep = wave(1)
+    assert jobs.n == 6
+    assert sum(r.n_docs for r in rep) == 30       # odd ids of 0..59
+    assert sum(r.total_chars for r in rep) == sum(
+        3 * len(good.format(i)) + 2 for i in range(1, 60, 2))
 
 
 def test_curation_sidecar_migration_seed(spark, eng, tmp_path):
