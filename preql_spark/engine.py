@@ -407,10 +407,7 @@ class Engine:
         current state the rollback point for every mutable table (the
         copy-on-write writes themselves are already durable)."""
         for mt in self.mutables.values():
-            with mt._lock:
-                vs = mt._versions()
-                if vs:
-                    mt._mark = vs[-1]
+            mt.commit()
 
     def rollback(self) -> None:
         """Reference ``rollback()`` (__builtins__.pql:183-189): revert
@@ -418,10 +415,8 @@ class Engine:
         state if never committed).  Divergence (documented): a table
         *created* since the last commit reverts to its empty creation
         version rather than disappearing."""
-        from preql_spark.sources.mutable import _rollback_to
         for name, mt in list(self.mutables.items()):
-            with mt._lock:
-                _rollback_to(mt, mt._mark)
+            mt.rollback()
             self._sync_mutable(name)
 
     def run_statement(self, code: str) -> None:

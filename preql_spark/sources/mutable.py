@@ -10,12 +10,28 @@ Reference semantics being reproduced:
 - ``t delete [conds]`` (evaluate.py:720-754)
 - auto-increment ``id`` pk unless ``bare`` (evaluate.py:262-267)
 
-Implementation: copy-on-write parquet versions (v0, v1, ... under a
-managed directory).  Each mutation writes a new complete version and
-atomically advances the current pointer — the plain-parquet analogue
-of Delta/Iceberg snapshots (which is what you'd use on a real
-cluster).  Multi-statement ``transaction {...}`` blocks are supported
-via version pinning (see :func:`transaction`); documented divergence:
+Implementation: parquet versions (v0, v1, ... under a managed
+directory), the plain-parquet analogue of Delta/Iceberg snapshots
+(which is what you'd use on a real cluster).  ``update``, ``delete``
+and ``merge`` write a new complete version (copy-on-write); an insert
+appends files to the current version unless that version is the
+commit mark or a transaction is open, when it too writes a new
+version.  One owner per lifecycle decision:
+
+- retention, :meth:`MutableTable._retain`: keep the newest four
+  versions and the commit mark; delete nothing while a transaction
+  pins the table;
+- invalidation, :meth:`MutableTable._moved`: every version change
+  drops the reader handle, a type change or rollback drops the kept
+  schema, and each write states the new id watermark (``delete``
+  reads it from the observation that counts its rows);
+- appends, :meth:`MutableTable._appendable`: one eligibility check
+  for both insert paths;
+- commit points, :meth:`MutableTable.commit` and
+  :meth:`MutableTable.rollback`.
+
+Multi-statement ``transaction {...}`` blocks are supported via
+version pinning (see :func:`transaction`); documented divergence:
 single-writer assumption — concurrent writers need a real table
 format's commit protocol.
 
@@ -33,6 +49,7 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+import uuid
 from contextlib import contextmanager
 
 from py4j.protocol import Py4JJavaError
@@ -42,39 +59,59 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def _arrow_rows(rows: list, schema: T.StructType):
+    """``rows`` (tuples in ``schema`` order) as a ``pyarrow.Table``.
+    The values first pass Spark's own verifier (same
+    ``PySparkTypeError`` for a wrong-typed value), then Spark Connect's
+    list-to-Arrow conversion, which keeps classic's value semantics
+    (naive timestamps as local time, decimal rounding, nested
+    types)."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    return (LocalDataToArrowConversion.convert(rows, schema, False)
+            if rows else to_arrow_schema(schema).empty_table())
+
+
 def _local_frame(spark: SparkSession, rows: list,
                  schema: T.StructType | str) -> DataFrame:
     """``rows`` (tuples in ``schema`` order; a DDL string or a
     ``StructType``) as a ``LocalRelation``.
     ``createDataFrame(list, schema)`` builds a Python RDD in classic
-    PySpark, so every action on it runs a Python-worker job; an Arrow
-    table becomes a ``LocalRelation`` whose collect runs none.  The
-    values first pass Spark's own verifier (same ``PySparkTypeError``
-    for a wrong-typed value), then Spark Connect's list-to-Arrow
-    conversion, which keeps classic's value semantics (naive
-    timestamps as local time, decimal rounding, nested types)."""
-    from pyspark.sql.conversion import LocalDataToArrowConversion
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _make_type_verifier
+    PySpark, so every action on it runs a Python-worker job; the
+    :func:`_arrow_rows` table becomes a ``LocalRelation`` whose collect
+    runs none."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
-    verify = _make_type_verifier(schema)
-    for r in rows:
-        verify(r)
-    table = (LocalDataToArrowConversion.convert(rows, schema, False)
-             if rows else to_arrow_schema(schema).empty_table())
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(_arrow_rows(rows, schema), schema)
 
 
-def _observed_n(obs: Observation, recount) -> int:
-    """The ``n`` metric ``obs`` carried through a write, or
+def _parquet_names(dt: T.DataType) -> bool:
+    """Whether Spark infers ``dt`` back from a pyarrow-written parquet
+    footer.  A day-time interval is written as a plain int64 and a
+    variant as a struct of two binaries, so a file holding either needs
+    Spark's schema key in its footer."""
+    if isinstance(dt, T.ArrayType):
+        return _parquet_names(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _parquet_names(dt.keyType) and _parquet_names(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return all(_parquet_names(f.dataType) for f in dt.fields)
+    return not isinstance(dt, (T.DayTimeIntervalType, T.VariantType))
+
+
+def _observed(obs: Observation, recount) -> dict:
+    """The metrics ``obs`` carried through a write, or only ``n`` from
     ``recount()`` when the optimizer pruned the observation with its
     subtree: a delete predicate that folds to TRUE turns the kept-rows
     filter into an empty relation, and ``obs.get`` then fails."""
     try:
-        return obs.get["n"]
+        return obs.get
     except Py4JJavaError:
-        return recount()
+        return {"n": recount()}
 
 
 def _assign_ids(df: DataFrame, id_col: str, base: int) -> DataFrame:
@@ -132,7 +169,7 @@ class MutableTable:
         self.root = os.path.join(root, name)
         self.id_col = id_col
         # set while a transaction() is open: the version to keep (and
-        # roll back to) — suspends version GC
+        # roll back to) — suspends retention
         self._pin: int | None = None
         # serializes the read-base → assign-ids → write-version
         # critical section so concurrent DML from driver threads never
@@ -141,26 +178,20 @@ class MutableTable:
         # single-writer model is the documented divergence from a real
         # multi-writer table format (Delta/Iceberg OCC).
         self._lock = threading.RLock()
-        # last committed version (reference commit()/rollback(),
-        # __builtins__.pql:176-189): creation state is the implicit
-        # first commit point; GC never collects the marked version
+        # last committed version, rollback()'s target: creation state
+        # is the implicit first commit point; retention keeps it
         self._mark: int = 0
-        # driver-side caches, all owned by the same single-writer
-        # lock as the version lineage: the resolved reader handle for
-        # the current version (a parquet read re-resolves the footer
-        # on every df() call — ~0.2 s of driver work that the DML
-        # paths each paid 3x per statement) and the id watermark
-        # (saves a full-table max(id) job per insert; at scale that
-        # job reads every footer).  Invalidated on every version
-        # change; the watermark is maintained exactly only on the
-        # insert_rows path, where the batch is a local list.  Third,
-        # the schema the first read inferred: a reader without one
-        # runs a one-task footer job per version, a reader with one
-        # none.  It survives writes whose (name, type) list equals it
-        # and is dropped by any other write (the unionByName widening
-        # path) and by rollback.
+        # driver-side caches, owned by the lock like the version
+        # lineage and changed only by _moved():
+        # - the reader handle for the current version (a parquet read
+        #   re-resolves the footer on every df() call);
+        # - the schema the first read inferred (a reader given it runs
+        #   no footer job; a reader without one runs a one-task job);
+        # - the id watermark, max(id) of the current version (0 when
+        #   empty), or None to recompute it with one aggregate (after
+        #   a rollback, a const CTAS or an update that sets the id).
         self._df_cache: DataFrame | None = None
-        self._df_cache_key: tuple | None = None
+        self._df_cache_key: str | None = None
         self._max_id_cache: int | None = None
         self._schema: T.StructType | None = None
         os.makedirs(self.root, exist_ok=True)
@@ -186,16 +217,18 @@ class MutableTable:
     # parquet files); versions smaller than this compact to one file
     _TARGET_FILE_BYTES = 128 * 1024 * 1024
 
-    def _write_version(self, df: DataFrame,
+    def _write_version(self, df: DataFrame, max_id: int | None,
                        compact: bool = False) -> None:
-        """``compact=True`` coalesces the write to ceil(table bytes /
-        128 MB) tasks — callers set it when the output is known to be
-        roughly current-table-sized (insert of a local batch, update,
-        delete), where per-tiny-file write tasks + commit renames
-        otherwise dominate.  A no-op at scale: coalesce only ever
-        REDUCES partitions, so a table with many 128 MB files keeps
-        its parallelism.  Not used for insert_from/merge, whose source
-        size is unknown to the driver."""
+        """Write ``df`` as the next version, whose id watermark is
+        ``max_id`` (see :meth:`_moved`).  ``compact=True`` coalesces
+        the write to ceil(table bytes / 128 MB) tasks — callers set it
+        when the output is known to be roughly current-table-sized
+        (insert of a local batch, update, delete), where per-tiny-file
+        write tasks + commit renames otherwise dominate.  A no-op at
+        scale: coalesce only ever REDUCES partitions, so a table with
+        many 128 MB files keeps its parallelism.  Not used for
+        insert_from/merge, whose source size is unknown to the
+        driver."""
         vs = self._versions()
         nxt = (vs[-1] + 1) if vs else 0
         target = os.path.join(self.root, f"v{nxt}")
@@ -203,31 +236,64 @@ class MutableTable:
             nparts = max(1, -(-self._table_bytes() // self._TARGET_FILE_BYTES))
             df = df.coalesce(nparts)
         df.write.mode("overwrite").parquet(target)
-        self._written(df.schema)
-        # retain the latest four versions: lazily-held reader handles
-        # (df() is lazy) must survive a few subsequent writes before
-        # they execute (real deployments use Delta/Iceberg snapshot
-        # GC).  An open transaction pins its start version: GC is
-        # suspended so rollback can restore it.
-        if self._pin is None:
-            for v in vs[:-3]:
-                if v == self._mark:
-                    continue           # rollback target stays restorable
-                shutil.rmtree(os.path.join(self.root, f"v{v}"),
-                              ignore_errors=True)
+        self._moved(df.schema, max_id)
+        self._retain()
 
-    def _written(self, schema: T.StructType) -> None:
-        """A write of ``schema``-typed rows landed in the current
-        version: drop the cached reader handle (version numbers can be
-        REUSED after a transaction rollback, so a path-keyed cache
-        alone would serve deleted files), and the kept schema unless
-        the write's (name, type) list equals it."""
+    def _retain(self) -> None:
+        """The one retention rule: keep the newest four versions
+        (a lazily held ``df()`` handle must survive a few writes before
+        it executes) and the commit mark (``rollback()``'s target);
+        delete nothing while a transaction pins the table."""
+        with self._lock:
+            if self._pin is not None:
+                return
+            for v in self._versions()[:-4]:
+                if v != self._mark:
+                    shutil.rmtree(os.path.join(self.root, f"v{v}"),
+                                  ignore_errors=True)
+
+    def _moved(self, schema: T.StructType | None,
+               max_id: int | None) -> None:
+        """The one invalidation point: the current version changed,
+        by a write of ``schema``-typed rows or by a rollback
+        (``schema=None``).  Drops the reader handle (version numbers
+        are reused after a rollback, so a path-keyed handle alone
+        would serve deleted files); drops the kept schema on a
+        rollback or when the written (name, type) list differs (the
+        ``unionByName`` widening path); sets the id watermark to
+        ``max_id``."""
         self._df_cache = None
         self._df_cache_key = None
-        if self._schema is not None and (
+        if schema is None or self._schema is not None and (
                 [(f.name, f.dataType) for f in schema.fields]
                 != [(f.name, f.dataType) for f in self._schema.fields]):
             self._schema = None
+        self._max_id_cache = max_id
+
+    def _restore(self, version: int | None) -> None:
+        """Make ``version`` current again: delete every later one."""
+        with self._lock:
+            for v in self._versions():
+                if version is None or v > version:
+                    shutil.rmtree(os.path.join(self.root, f"v{v}"),
+                                  ignore_errors=True)
+            self._moved(None, None)
+
+    # ---- commit points (reference commit()/rollback(),
+    # __builtins__.pql:176-189) ---------------------------------------
+    @_locked
+    def commit(self) -> None:
+        """Make the current version the rollback point (the
+        copy-on-write writes themselves are already durable)."""
+        vs = self._versions()
+        if vs:
+            self._mark = vs[-1]
+
+    @_locked
+    def rollback(self) -> None:
+        """Revert to the last :meth:`commit` point (the creation state
+        if never committed)."""
+        self._restore(self._mark)
 
     # ---- DDL -------------------------------------------------------
     @classmethod
@@ -241,7 +307,7 @@ class MutableTable:
         if not bare and id_col not in [f.name for f in schema.fields]:
             schema = T.StructType(
                 [T.StructField(id_col, T.LongType(), False)] + list(schema.fields))
-        t._write_version(spark.createDataFrame([], schema))
+        t._write_version(spark.createDataFrame([], schema), max_id=0)
         return t
 
     @classmethod
@@ -251,18 +317,19 @@ class MutableTable:
         """CTAS ``table foo = expr`` (evaluate.py:177-185): materialize;
         ``const=True`` keeps existing ids (new_table_from_expr)."""
         t = cls(spark, name, root, id_col=id_col)
+        n = None                       # kept ids: recompute on insert
         if not const and id_col not in df.columns:
-            df = _assign_ids(df, id_col, base=1)
-        t._write_version(df)
+            df, n = _assign_ids_counted(df, id_col, base=1)
+        t._write_version(df, max_id=n)
         return t
 
     # ---- read ------------------------------------------------------
     def df(self) -> DataFrame:
-        # Under the table lock: version GC (inside _write_version,
-        # same lock) could otherwise delete the listed path between
-        # the listdir and the parquet footer read — observed as a
-        # flaky PATH_NOT_FOUND in the ported threading test when 10
-        # writer threads churn versions under CPU contention.
+        # Under the table lock: retention (inside _write_version, same
+        # lock) could otherwise delete the listed path between the
+        # listdir and the parquet footer read — observed as a flaky
+        # PATH_NOT_FOUND in the ported threading test when 10 writer
+        # threads churn versions under CPU contention.
         with self._lock:
             path = self._current_path()
             if path is None:
@@ -292,69 +359,31 @@ class MutableTable:
         rows = self.insert_rows([values])
         return rows[0]
 
-    # ---- append-delta insert path -----------------------------------
-    # An insert only ADDS rows, so rewriting the whole table per
-    # insert (the v0..vN copy-on-write) is O(table) work for an
-    # O(batch) change — at scale that is rewriting the entire table to
-    # add a handful of rows.  When no transaction is open and the
-    # current version is NOT the rollback target (_mark), the batch is
-    # instead appended as extra parquet files inside the current
-    # version directory: rollback() still discards the whole version,
-    # lazily-held df() handles keep their frozen file list (same
-    # snapshot semantics as before), and readers under the lock see
-    # the append atomically (the cached handle is dropped).  A
-    # copy-on-write still happens for the FIRST insert after create/
-    # commit (opening a fresh version to protect the rollback target)
-    # and for every statement inside an open transaction.
+    # ---- append path -------------------------------------------------
+    # An insert only ADDS rows, so rewriting the whole table per insert
+    # is O(table) work for an O(batch) change.  Both insert paths
+    # instead append files to the current version when _appendable
+    # says so.  rollback() still discards whole versions, lazily held
+    # df() handles keep their frozen file list, and readers under the
+    # lock see the append at once (the handle is dropped).  The first
+    # insert after create/commit (protecting the rollback target) and
+    # every statement inside an open transaction still open a new
+    # version.
 
-    def _can_append(self) -> bool:
+    def _appendable(self, cur: DataFrame, batch: DataFrame) -> bool:
+        """``batch`` may be appended to the current version ``cur``:
+        no transaction is open, the current version is newer than the
+        commit mark, and the batch's name→type map equals the stored
+        one (the copy-on-write union widens types instead)."""
         vs = self._versions()
-        return self._pin is None and bool(vs) and vs[-1] > self._mark
+        return (self._pin is None and bool(vs) and vs[-1] > self._mark
+                and dict(batch.dtypes) == dict(cur.dtypes))
 
-    # types whose Spark-collected Python values round-trip exactly
-    # through pyarrow without coercion ambiguity; anything else takes
-    # the Spark writer
-    _PA_SAFE = (T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-                T.DoubleType, T.FloatType, T.StringType, T.BooleanType,
-                T.DateType)
-
-    def _append_batch(self, batch: DataFrame, rows: list[Row],
-                      schema: T.StructType) -> None:
-        """Append the batch's rows as new file(s) inside the current
-        version dir.  Simple-typed batches are written driver-side
-        with pyarrow (zero Spark jobs — the values are the
-        Spark-verified ones from the LocalRelation collect); anything
-        else goes through a one-task Spark write into a temp dir whose
-        part files are then moved in."""
-        import uuid
-        cur_path = self._current_path()
-        tag = uuid.uuid4().hex[:12]
-        if all(isinstance(f.dataType, self._PA_SAFE) for f in schema.fields):
-            try:
-                import pyarrow as pa
-                import pyarrow.parquet as pq
-                from pyspark.sql.pandas.types import to_arrow_schema
-                aschema = to_arrow_schema(schema)
-                arrays = [
-                    pa.array([r[i] for r in rows], type=aschema.field(i).type)
-                    for i in range(len(schema.fields))]
-                tmp = os.path.join(cur_path, f".append-{tag}.parquet.tmp")
-                pq.write_table(pa.Table.from_arrays(arrays, schema=aschema),
-                               tmp)
-                os.rename(tmp,
-                          os.path.join(cur_path, f"append-{tag}.parquet"))
-                self._written(schema)
-                return
-            except Exception:
-                pass   # fall through to the Spark writer
-        self._append_df(batch.coalesce(1))
-
-    def _append_df(self, df: DataFrame) -> None:
+    def _append_df(self, df: DataFrame, max_id: int) -> None:
         """Spark-writer append: write ``df`` to a temp dir, move its
         part files into the current version.  The write keeps the
         frame's own partitioning — a distributed ``t += expr`` batch
         appends in parallel and never rewrites the existing table."""
-        import uuid
         cur_path = self._current_path()
         tag = uuid.uuid4().hex[:12]
         tmpdir = os.path.join(self.root, f".append-{tag}")
@@ -364,7 +393,7 @@ class MutableTable:
                 os.rename(os.path.join(tmpdir, f),
                           os.path.join(cur_path, f"append-{tag}-{f}"))
         shutil.rmtree(tmpdir, ignore_errors=True)
-        self._written(df.schema)
+        self._moved(df.schema, max_id)
 
     @_locked
     def insert_rows(self, rows: list[dict]) -> list[Row]:
@@ -373,33 +402,39 @@ class MutableTable:
         are assigned driver-side by enumeration: the input IS a local
         Python list, so this costs zero Spark jobs and preserves the
         reference's insertion-order id sequence.  On the append path
-        the whole statement starts no Spark job."""
+        the verified Arrow batch is written driver-side with pyarrow,
+        so the whole statement starts no Spark job."""
+        import pyarrow.parquet as pq
         cur = self.df()
         base = self._next_id_base(cur)
-        data_schema = T.StructType(
-            [f for f in cur.schema.fields if f.name != self.id_col])
-        full_schema = T.StructType(
-            [T.StructField(self.id_col, T.LongType(), False)]
-            + list(data_schema.fields))
-        # the batch is a LocalRelation (verified driver-side, built
-        # from Arrow): collect() is pure driver-side (no job) and
-        # returns Spark's coerced values
-        batch = _local_frame(
-            self.spark,
-            [(base + i, *(r.get(f.name) for f in data_schema.fields))
-             for i, r in enumerate(rows)],
-            full_schema)
+        data = [f for f in cur.schema.fields if f.name != self.id_col]
+        schema = T.StructType(
+            [T.StructField(self.id_col, T.LongType(), False)] + data)
+        table = _arrow_rows(
+            [(base + i, *(r.get(f.name) for f in data))
+             for i, r in enumerate(rows)], schema)
+        # a LocalRelation: collect() starts no job and returns Spark's
+        # coerced values
+        batch = self.spark.createDataFrame(table, schema)
         out = batch.collect()
-        # append only when the stored id column is already long —
-        # otherwise the copy-on-write union's type widening applies
-        if (self._can_append()
-                and isinstance(cur.schema[self.id_col].dataType
-                               if self.id_col in cur.columns else None,
-                               T.LongType)):
-            self._append_batch(batch, out, full_schema)
+        max_id = base + len(rows) - 1
+        if self._appendable(cur, batch):
+            if not _parquet_names(schema):
+                # Spark's own footer key: a reader inferring from this
+                # file (after a rollback) then sees the stored types
+                table = table.replace_schema_metadata(
+                    {"org.apache.spark.sql.parquet.row.metadata":
+                     schema.json()})
+            # a hidden name until complete: readers skip dot-files
+            path = self._current_path()
+            tag = uuid.uuid4().hex[:12]
+            tmp = os.path.join(path, f".append-{tag}.parquet.tmp")
+            pq.write_table(table, tmp)
+            os.rename(tmp, os.path.join(path, f"append-{tag}.parquet"))
+            self._moved(schema, max_id)
         else:
-            self._write_version(cur.unionByName(batch), compact=True)
-        self._max_id_cache = base + len(rows) - 1
+            self._write_version(cur.unionByName(batch), max_id,
+                                compact=True)
         return out
 
     @_locked
@@ -412,47 +447,33 @@ class MutableTable:
         base = self._next_id_base(cur)
         cols = [c for c in cur.columns if c != self.id_col]
         batch, n = _assign_ids_counted(src.select(*cols), self.id_col, base)
-        # O(batch) append instead of an O(table) rewrite — at scale
-        # this is the difference between writing the new rows and
-        # rewriting the entire table per insert.  Only when the batch
-        # column types already equal the stored ones: unionByName in
-        # the copy-on-write path coerces to common types (possibly
-        # widening the table schema), which an append cannot express.
-        aligned = batch.select(*cur.columns)
-        if self._can_append() and dict(aligned.dtypes) == dict(cur.dtypes):
-            self._append_df(aligned)
+        batch = batch.select(*cur.columns)
+        if self._appendable(cur, batch):
+            self._append_df(batch, base + n - 1)
         else:
-            self._write_version(cur.unionByName(batch))
-        self._max_id_cache = base + n - 1
+            self._write_version(cur.unionByName(batch), base + n - 1)
 
     @_locked
-    def update(self, cond, count: bool = True, _cur: DataFrame | None = None,
-               **sets) -> int:
+    def update(self, cond, _cur: DataFrame | None = None, **sets) -> int:
         """``t[conds] update {col: expr}`` — copy-on-write MERGE shape.
         Returns the number of updated rows (rows where ``cond`` is
         TRUE; NULL predicates update nothing, like SQL), counted by an
         ``Observation`` that rides on the version write, so no extra
-        job runs.  ``count=False`` attaches none and returns -1.
-        ``_cur`` lets a caller that built ``cond`` against a specific
-        read of the table pass that exact DataFrame (column
+        job runs.  ``_cur`` lets a caller that built ``cond`` against
+        a specific read of the table pass that exact DataFrame (column
         expressions resolve by attribute id in Spark)."""
         cur = _cur if _cur is not None else self.df()
-        src = cur
-        if count:
-            obs = Observation()
-            src = cur.observe(obs, F.count_if(cond).alias("n"))
-        updated = src.withColumns(
+        obs = Observation()
+        updated = cur.observe(obs, F.count_if(cond).alias("n")).withColumns(
             {k: F.when(cond, v if isinstance(v, Column) else F.lit(v))
              .otherwise(F.col(k)) for k, v in sets.items()})
-        self._write_version(updated, compact=True)
-        if self.id_col in sets:
-            self._max_id_cache = None
-        return (_observed_n(obs, lambda: cur.filter(cond).count())
-                if count else -1)
+        self._write_version(
+            updated, None if self.id_col in sets else self._max_id_cache,
+            compact=True)
+        return _observed(obs, lambda: cur.filter(cond).count())["n"]
 
     @_locked
-    def merge(self, src: DataFrame, on: list[str] | str,
-              counts: bool = True) -> dict:
+    def merge(self, src: DataFrame, on: list[str] | str) -> dict:
         """Upsert (Delta/Iceberg MERGE INTO shape, beyond the
         reference's DML): rows of ``src`` matching on ``on`` replace
         the current rows' non-key columns; unmatched src rows are
@@ -461,8 +482,9 @@ class MutableTable:
         on the keys).  Like Delta/Iceberg MERGE, raises if ``src``
         contains duplicate key values (the matched join would fan out
         and silently duplicate target rows).  Returns
-        {"updated": n, "inserted": n}; ``counts=False`` skips the two
-        count jobs (returns -1s)."""
+        {"updated": n, "inserted": n}: the first counted by an
+        ``Observation`` on the version write, the second by the id
+        assignment."""
         keys = [on] if isinstance(on, str) else list(on)
         cur = self.df()
         data_cols = [c for c in cur.columns if c != self.id_col]
@@ -483,67 +505,48 @@ class MutableTable:
                            *[(F.col(f"s.{c}") if c in upd_cols
                               else F.col(f"t.{c}")).alias(c)
                              for c in data_cols if c not in keys]))
-        n_upd = matched.count() if counts else -1
         fresh = src.join(cur.select(*keys), keys, "left_anti")
         base = self._next_id_base(cur)
-        # the id-assignment pass already counts the fresh rows — that
-        # count IS "inserted", so the separate fresh.count() job goes
-        inserted, n_fresh = _assign_ids_counted(
+        inserted, n_ins = _assign_ids_counted(
             fresh.select(
                 *keys, *upd_cols,
                 *[F.lit(None).cast(cur.schema[c].dataType).alias(c)
                   for c in data_cols if c not in keys and c not in upd_cols]
             ).select(*data_cols),
             self.id_col, base)
-        n_ins = n_fresh if counts else -1
+        obs = Observation()
         out = (kept.select(self.id_col, *data_cols)
-               .unionByName(matched.select(self.id_col, *data_cols))
+               .unionByName(matched.observe(obs, F.count(F.lit(1)).alias("n"))
+                            .select(self.id_col, *data_cols))
                .unionByName(inserted))
-        self._write_version(out)
-        self._max_id_cache = base + n_fresh - 1
-        return {"updated": n_upd, "inserted": n_ins}
+        self._write_version(out, base + n_ins - 1)
+        return {"updated": _observed(obs, matched.count)["n"],
+                "inserted": n_ins}
 
     @_locked
-    def delete(self, cond, count: bool = True,
-               _cur: DataFrame | None = None) -> int:
+    def delete(self, cond, _cur: DataFrame | None = None) -> int:
         """``t delete [conds]`` — filtered overwrite.  Deletes only
         rows where the predicate is TRUE: rows where it evaluates NULL
         are KEPT (``~cond`` alone would drop them — NULL negated is
         NULL), matching SQL/reference DELETE.  Returns rows deleted,
-        counted by an ``Observation`` on the rewrite (no extra job);
-        ``count=False`` attaches none and returns -1."""
+        counted by an ``Observation`` on the rewrite (no extra job)."""
         cur = _cur if _cur is not None else self.df()
         hit = cond if isinstance(cond, Column) else F.expr(cond)
         kill = hit.eqNullSafe(True)
-        src = cur
-        if count:
-            obs = Observation()
-            src = cur.observe(obs, F.count_if(kill).alias("n"))
-        self._write_version(src.filter(~kill), compact=True)
-        # deleting the max-id row must re-open its id for reuse
-        # (max(id)+1 semantics) — recompute lazily
-        self._max_id_cache = None
-        return (_observed_n(obs, lambda: cur.filter(hit).count())
-                if count else -1)
-
-
-def _rollback_to(t: MutableTable, version: int | None) -> None:
-    with t._lock:
-        for v in t._versions():
-            if version is None or v > version:
-                shutil.rmtree(os.path.join(t.root, f"v{v}"),
-                              ignore_errors=True)
-        # current version changed out from under the caches
-        t._df_cache = None
-        t._df_cache_key = None
-        t._max_id_cache = None
-        t._schema = None
-
-
-def _gc(t: MutableTable) -> None:
-    vs = t._versions()
-    for v in vs[:-2]:
-        shutil.rmtree(os.path.join(t.root, f"v{v}"), ignore_errors=True)
+        metrics = [F.count_if(kill).alias("n")]
+        if self.id_col in cur.columns:     # a bare table has no ids
+            metrics.append(
+                F.max(F.when(~kill, F.col(self.id_col))).alias("m"))
+        obs = Observation()
+        self._write_version(cur.observe(obs, *metrics).filter(~kill),
+                            None, compact=True)
+        got = _observed(obs, lambda: cur.filter(hit).count())
+        # the kept rows' max id is the watermark, so a deleted max-id
+        # row's id is reused (max(id)+1 semantics) with no aggregate
+        # job; a pruned observation leaves it to recompute
+        if "m" in got:
+            self._max_id_cache = got["m"] or 0
+        return got["n"]
 
 
 @contextmanager
@@ -553,23 +556,24 @@ def transaction(*tables: MutableTable):
     exception rolls every table back to its pre-transaction version.
 
     The copy-on-write versioning makes this nearly free: BEGIN pins
-    each table's current version (suspending GC), ROLLBACK deletes the
-    versions written since, COMMIT just unpins and GCs.  Single-writer
-    semantics, like the rest of MutableTable — concurrent writers need
-    a real table format (Delta/Iceberg), the documented divergence.
+    each table's current version (suspending retention), ROLLBACK
+    deletes the versions written since, COMMIT just unpins and applies
+    the retention rule.  Single-writer semantics, like the rest of
+    MutableTable — concurrent writers need a real table format
+    (Delta/Iceberg), the documented divergence.
     """
+    outer = {t: t._pin for t in tables}
     pins: dict[MutableTable, int | None] = {}
     for t in tables:
         vs = t._versions()
-        t._pin = vs[-1] if vs else None
-        pins[t] = t._pin
+        t._pin = pins[t] = vs[-1] if vs else None
     try:
         yield
     except BaseException:
         for t, v in pins.items():
-            _rollback_to(t, v)
+            t._restore(v)
         raise
     finally:
         for t in pins:
-            t._pin = None
-            _gc(t)
+            t._pin = outer[t]          # an enclosing block still pins it
+            t._retain()

@@ -290,8 +290,9 @@ func recommend(liked_movie_ids) {{
     got = [(x.movieId, x.score) for x in r.collect()]
     # u1 similarity 9, u2 1, u3 3 → Heat: 9*5+1*2=47, Casino: 1*5+3*4=17
     assert got == [(3, 47.0), (4, 17.0)]
+    # a join keeps no row order: rank by score before taking the top
     titles = ex.q('join(s: recommend([1, 2]).movieId, m: movies.movieId)'
-                  ' { Movie: "* " + m.title } [..1]')
+                  ' order { ^s.score } { Movie: "* " + m.title } [..1]')
     assert [x.Movie for x in titles.collect()] == ["* Heat"]
 
 

@@ -1437,6 +1437,21 @@ def test_commit_rollback_golden(leng):
     assert leng.q("one cr").x == 1
 
 
+def test_rollback_after_transaction_golden(leng):
+    """commit(), two updates, a transaction block, then rollback():
+    the committed rows come back.  The transaction's exit applies the
+    same retention rule as every write, which keeps the commit
+    point."""
+    leng.q("table crt { x: int }\nnew crt(1)\nnew crt(2)")
+    leng.q("commit()")
+    leng.q("crt[x == 1] update {x: 10}")
+    leng.q("crt[x == 2] update {x: 20}")
+    leng.q("transaction { crt[x == 10] update {x: 100} }")
+    assert sorted(leng.q("list(crt{x})")) == [20, 100]
+    leng.q("rollback()")
+    assert sorted(leng.q("list(crt{x})")) == [1, 2]
+
+
 def test_stdlib_function_forms(leng):
     """dict(), remove_table*, date-part function spellings
     (__builtins__.pql:164,347-353,563-573)."""
