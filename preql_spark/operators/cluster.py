@@ -60,7 +60,8 @@ def semdedup(df: DataFrame, tau: float = 0.45, k: int = 8, iters: int = 2,
     """Semantic dedup: cluster, then drop near-duplicate cluster-mates
     at cosine >= tau, keeping one representative per neighborhood.
 
-    ``pair_method`` picks the min-id pair kernel:
+    ``pair_method`` picks the pair kernel, shared by both ``keep``
+    rules:
 
     - ``"arrow"`` (default): BLOCKWISE gram matrices in an Arrow
       ``applyInPandas`` kernel — the |cluster|² cosine stage is dense
@@ -75,9 +76,12 @@ def semdedup(df: DataFrame, tau: float = 0.45, k: int = 8, iters: int = 2,
       mega-cluster cannot OOM one executor; candidate volume is
       unchanged (every in-cluster pair is still examined exactly
       once per group it lands in, drops are de-duplicated after).
-    - ``"sql"``: the pure-DataFrame cluster-local pair join — keeps
-      everything JVM-side; the cross-check path (pytest asserts both
-      methods return identical survivors).
+      The min-id rule reduces each gram tile to drop flags; the
+      paper rule emits the matched pairs (:func:`_gram_kernel`).
+    - ``"sql"``: the pure-DataFrame cluster-local pair join
+      (:func:`_sql_pairs`) — keeps everything JVM-side; the
+      cross-check path (pytest asserts both methods return identical
+      survivors).
 
     ``keep`` selects the representative rule, both deterministic:
 
@@ -113,127 +117,112 @@ def semdedup(df: DataFrame, tau: float = 0.45, k: int = 8, iters: int = 2,
                            F.col(vec_col).alias("__v"))
     if pair_method == "arrow":
         drops = _min_id_drops_arrow(base, tau, max_group=max_group)
-    elif pair_method == "sql":
-        normed = base.withColumn("__n", norm(F.col("__v")))
-        left = normed.select(F.col("__id").alias("id_a"), "cluster",
-                             F.col("__v").alias("__va"),
-                             F.col("__n").alias("__na"))
-        right = normed.select(F.col("__id").alias("id_b"),
-                              F.col("cluster").alias("__cb"),
-                              F.col("__v").alias("__vb"),
-                              F.col("__n").alias("__nb"))
-        # try_divide: a zero-norm vector has UNDEFINED cosine — the
-        # policy (both pair_methods) is "never a match": NULL here,
-        # NaN->False in the arrow kernel.  Bare / would crash under
-        # ANSI mode, and Spark/DuckDB's NaN-compares-greater
-        # semantics would have called it a match — the principled
-        # option is taken explicitly instead.
-        drops = (left.join(right, (F.col("cluster") == F.col("__cb"))
-                           & (F.col("id_a") < F.col("id_b")))
-                 .filter(F.try_divide(
-                     dot(F.col("__va"), F.col("__vb")),
-                     F.col("__na") * F.col("__nb")) >= tau)
-                 .select(F.col("id_b").alias("__drop"))
-                 .distinct())
     else:
-        raise ValueError(f"pair_method must be arrow/sql, "
-                         f"got {pair_method!r}")
+        drops = (_sql_pairs(base.withColumn("__n", norm(F.col("__v"))),
+                            tau)
+                 .select(F.col("id_b").alias("__drop")).distinct())
     return (base.join(drops, base["__id"] == drops["__drop"], "left_anti")
             .select(F.col("__id").alias(id_col), "cluster"))
 
 
-def _min_id_drops_arrow(base: DataFrame, tau: float,
-                        block: int = 4096,
+def _sql_pairs(base: DataFrame, tau: float) -> DataFrame:
+    """(id_a, id_b) in-cluster pairs at cosine >= tau, id_a < id_b,
+    over ``(__id, cluster, __v, __n)`` — the pure-DataFrame
+    cluster-local pair join, the cross-check for the gram kernel.
+
+    try_divide: a zero-norm vector has UNDEFINED cosine — the policy
+    (both pair_methods) is "never a match": NULL here, NaN->False in
+    the gram kernel.  Bare / would crash under ANSI mode, and
+    Spark/DuckDB's NaN-compares-greater semantics would have called
+    it a match — the principled option is taken explicitly instead."""
+    left = base.select(F.col("__id").alias("id_a"), "cluster",
+                       F.col("__v").alias("__va"),
+                       F.col("__n").alias("__na"))
+    right = base.select(F.col("__id").alias("id_b"),
+                        F.col("cluster").alias("__cb"),
+                        F.col("__v").alias("__vb"),
+                        F.col("__n").alias("__nb"))
+    return (left.join(right, (F.col("cluster") == F.col("__cb"))
+                      & (F.col("id_a") < F.col("id_b")))
+            .filter(F.try_divide(dot(F.col("__va"), F.col("__vb")),
+                                 F.col("__na") * F.col("__nb")) >= tau)
+            .select("id_a", "id_b"))
+
+
+def _min_id_drops_arrow(base: DataFrame, tau: float, block: int = 4096,
                         max_group: int = 65_536) -> DataFrame:
-    """(__drop) ids having a lower-id cluster-mate at cosine >= tau,
-    via blockwise gram matrices (see semdedup).
+    """(__drop) ids having a lower-id cluster-mate at cosine >= tau:
+    the min-id consumer of the salted gram kernel.  Each group's match
+    tiles are reduced with ``any`` to drop flags (no pair list is
+    materialized); one id can be dropped by several groups, hence the
+    ``distinct``."""
+    def find_drops(key, pdf):
+        import numpy as np
+        import pandas as pd
+        ida, idb, tiles = _gram_group(key, pdf, tau, block)
+        drop_a = np.zeros(len(ida), dtype=bool)
+        drop_b = np.zeros(len(idb), dtype=bool)
+        for i0, j0, match in tiles:
+            i1, j1 = i0 + match.shape[0], j0 + match.shape[1]
+            # whichever side of a matched pair has the HIGHER id drops
+            lower = ida[i0:i1, None] < idb[None, j0:j1]
+            drop_b[j0:j1] |= (match & lower).any(axis=0)
+            drop_a[i0:i1] |= (match & ~lower).any(axis=1)
+        return pd.DataFrame(
+            {"__drop": np.concatenate([ida[drop_a], idb[drop_b]])})
+
+    return _gram_kernel(base, max_group, ("__drop",), find_drops).distinct()
+
+
+def _pairs_arrow(base: DataFrame, tau: float, block: int = 4096,
+                 max_group: int = 65_536) -> DataFrame:
+    """(id_a, id_b) in-cluster pairs at cosine >= tau, id_a < id_b —
+    the pair-emitting consumer of the salted gram kernel.  A pair
+    lands in exactly one group, so no post-dedup is needed.  Output
+    volume equals the SQL pair join's (near-dup density × corpus), but
+    the |cluster|²-candidate COSINE work runs in BLAS instead of a
+    CodegenFallback HOF fold per pair."""
+    def find_pairs(key, pdf):
+        import numpy as np
+        import pandas as pd
+        ida, idb, tiles = _gram_group(key, pdf, tau, block)
+        out_a, out_b = [ida[:0]], [idb[:0]]
+        for i0, j0, match in tiles:
+            ii, jj = np.nonzero(match)
+            la, lb = ida[ii + i0], idb[jj + j0]
+            lower = la < lb
+            out_a.append(np.where(lower, la, lb))
+            out_b.append(np.where(lower, lb, la))
+        return pd.DataFrame({"id_a": np.concatenate(out_a),
+                             "id_b": np.concatenate(out_b)})
+
+    return _gram_kernel(base, max_group, ("id_a", "id_b"), find_pairs)
+
+
+def _gram_kernel(base: DataFrame, max_group: int, out: tuple,
+                 kernel) -> DataFrame:
+    """The salted blockwise gram kernel's frame over
+    ``(__id, cluster, __v)``, shared by both semdedup keep rules: rows
+    are grouped into task groups and ``kernel(key, pdf)`` (which reads
+    its group through :func:`_gram_group`) returns the group's pandas
+    output, one id-typed column per name in ``out``.
 
     Memory bound: a cluster of n rows is hash-salted into
     ``s = ceil(n / max_group)`` sub-blocks; each task group is one
     sub-block pair (ga <= gb), so a task holds at most ``2·max_group``
     rows of the cluster (plus one ``block``² float64 gram tile) no
     matter how large the cluster is.  Every in-cluster pair lands in
-    exactly one group, drops are ``distinct``-ed because one id can be
-    dropped by several groups.  The common case (cluster <= max_group)
-    degenerates to s = 1, a single (0, 0) group per cluster.
+    exactly one group — same-block pairs in (b, b), cross-block pairs
+    in (min, max).  The common case (cluster <= max_group) degenerates
+    to s = 1, a single (0, 0) group per cluster.
 
     The output schema mirrors the id column's own type, so string or
-    integral ids both work.  Zero-norm vectors have undefined cosine
-    and never match (numpy NaN >= tau is False, matching the sql
-    path's try_divide NULL).  Exactness note: the sql fold sums
-    products left-to-right while BLAS may sum pairwise, so a cosine
-    within one ulp of tau could in principle differ between paths —
-    real corpora (and the fixtures the cross-check test uses) have
-    finite margins at the threshold."""
+    integral ids both work."""
+    from pyspark.sql import Window
     from pyspark.sql import types as T
 
     id_type = base.schema["__id"].dataType
-    out_schema = T.StructType([T.StructField("__drop", id_type)])
-
-    def _mat(part):
-        import numpy as np
-        return np.stack(part.to_numpy()).astype(np.float64)
-
-    def _pairs_lower(ids, m, nrm):
-        """dropped[j] = any i < j with cos(i, j) >= tau (ids sorted)."""
-        import numpy as np
-        n = len(ids)
-        dropped = np.zeros(n, dtype=bool)
-        for j0 in range(1, n, block):
-            j1 = min(j0 + block, n)
-            hit = np.zeros(j1 - j0, dtype=bool)
-            for i0 in range(0, j1, block):
-                i1 = min(i0 + block, j1)
-                g = m[i0:i1] @ m[j0:j1].T
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = g / np.outer(nrm[i0:i1], nrm[j0:j1])
-                # NaN >= tau is False in numpy: zero-norm never matches
-                match = sim >= tau
-                # strictly-lower GLOBAL index (ids sorted => lower id)
-                gi = np.arange(i0, i1)[:, None]
-                gj = np.arange(j0, j1)[None, :]
-                hit |= (match & (gi < gj)).any(axis=0)
-            dropped[j0:j1] = hit
-        return dropped
-
-    def find_drops(key, pdf):
-        import numpy as np
-        import pandas as pd
-        _, ga, gb = key
-        if ga == gb:
-            pdf = pdf.sort_values("__id", kind="mergesort")
-            ids = pdf["__id"].to_numpy()
-            m = _mat(pdf["__v"])
-            dropped = _pairs_lower(ids, m, np.linalg.norm(m, axis=1))
-            return pd.DataFrame({"__drop": ids[dropped]})
-        # cross-sub-block group: compare block ga rows against block
-        # gb rows; whichever side of a matched pair has the HIGHER id
-        # drops (within-block pairs belong to the (b, b) groups)
-        a, b = pdf[pdf["__b"] == ga], pdf[pdf["__b"] == gb]
-        if not len(a) or not len(b):
-            return pd.DataFrame({"__drop": pdf["__id"][:0]})
-        ida, idb = a["__id"].to_numpy(), b["__id"].to_numpy()
-        ma, mb = _mat(a["__v"]), _mat(b["__v"])
-        na = np.linalg.norm(ma, axis=1)
-        nb = np.linalg.norm(mb, axis=1)
-        drop_a = np.zeros(len(ida), dtype=bool)
-        drop_b = np.zeros(len(idb), dtype=bool)
-        for i0 in range(0, len(ida), block):
-            i1 = min(i0 + block, len(ida))
-            for j0 in range(0, len(idb), block):
-                j1 = min(j0 + block, len(idb))
-                g = ma[i0:i1] @ mb[j0:j1].T
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = g / np.outer(na[i0:i1], nb[j0:j1])
-                match = sim >= tau
-                lower = ida[i0:i1, None] < idb[None, j0:j1]
-                drop_b[j0:j1] |= (match & lower).any(axis=0)
-                drop_a[i0:i1] |= (match & ~lower).any(axis=1)
-        return pd.DataFrame(
-            {"__drop": np.concatenate([ida[drop_a], idb[drop_b]])})
-
-    from pyspark.sql import Window
-
+    out_schema = T.StructType([T.StructField(c, id_type) for c in out])
     # cluster sizes via a WINDOW count, not a separate aggregate: a
     # groupBy subtree would recompute the upstream assignment (the
     # expensive argmin scan) a second time and broadcast-join it back
@@ -257,98 +246,51 @@ def _min_id_drops_arrow(base: DataFrame, tau: float,
             .select("cluster", F.col("__g.ga").alias("__ga"),
                     F.col("__g.gb").alias("__gb"), "__b", "__id", "__v")
             .groupBy("cluster", "__ga", "__gb")
-            .applyInPandas(find_drops, schema=out_schema)
-            .distinct())
+            .applyInPandas(kernel, schema=out_schema))
 
 
-def _pairs_arrow(base: DataFrame, tau: float, block: int = 4096,
-                 max_group: int = 65_536) -> DataFrame:
-    """(id_a, id_b) in-cluster pairs at cosine >= tau, id_a < id_b —
-    the PAIR-emitting face of the salted gram kernel (same group
-    structure and memory bound as :func:`_min_id_drops_arrow`).  A
-    pair lands in exactly one group — same-block pairs in (b, b),
-    cross-block pairs in (min, max) — so no post-dedup is needed.
-    Output volume equals the SQL pair join's (near-dup density ×
-    corpus), but the |cluster|²-candidate COSINE work runs in BLAS
-    instead of a CodegenFallback HOF fold per pair."""
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
+def _gram_group(key, pdf, tau: float, block: int):
+    """``(ida, idb, tiles)`` of one task group: the ids of its two
+    sub-blocks and a generator of ``(i0, j0, match)`` gram tiles, where
+    ``match[i, j]`` is ``cos(a[i0 + i], b[j0 + j]) >= tau``.  A
+    same-block group (b, b) is id-sorted, only its upper triangle is
+    visited and ``i < j`` is enforced, so every pair is examined
+    exactly once; a cross-block group visits every tile.
 
-    id_type = base.schema["__id"].dataType
-    out_schema = T.StructType([T.StructField("id_a", id_type),
-                               T.StructField("id_b", id_type)])
+    Zero-norm vectors have undefined cosine and never match (numpy
+    NaN >= tau is False, matching the sql path's try_divide NULL).
+    Exactness note: the sql fold sums products left-to-right while
+    BLAS may sum pairwise, so a cosine within one ulp of tau could in
+    principle differ between paths — real corpora (and the fixtures
+    the cross-check test uses) have finite margins at the threshold."""
+    _, ga, gb = key
+    same = ga == gb
+    if same:
+        a = b = pdf.sort_values("__id", kind="mergesort")
+    else:
+        a, b = pdf[pdf["__b"] == ga], pdf[pdf["__b"] == gb]
 
-    def _mat(part):
+    def tiles():
         import numpy as np
-        return np.stack(part.to_numpy()).astype(np.float64)
+        if not len(a) or not len(b):
+            return
+        ma = np.stack(a["__v"].to_numpy()).astype(np.float64)
+        mb = ma if same else np.stack(b["__v"].to_numpy()).astype(np.float64)
+        na = np.linalg.norm(ma, axis=1)
+        nb = na if same else np.linalg.norm(mb, axis=1)
+        for i0 in range(0, len(ma), block):
+            i1 = min(i0 + block, len(ma))
+            for j0 in range(i0 if same else 0, len(mb), block):
+                j1 = min(j0 + block, len(mb))
+                g = ma[i0:i1] @ mb[j0:j1].T
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    sim = g / np.outer(na[i0:i1], nb[j0:j1])
+                match = sim >= tau
+                if same and i0 == j0:
+                    match = np.triu(match, 1)
+                yield i0, j0, match
 
-    def find_pairs(key, pdf):
-        import numpy as np
-        import pandas as pd
-        _, ga, gb = key
-        out_a, out_b = [], []
-        if ga == gb:
-            pdf = pdf.sort_values("__id", kind="mergesort")
-            ids = pdf["__id"].to_numpy()
-            m = _mat(pdf["__v"])
-            nrm = np.linalg.norm(m, axis=1)
-            n = len(ids)
-            for i0 in range(0, n, block):
-                i1 = min(i0 + block, n)
-                for j0 in range(i0, n, block):
-                    j1 = min(j0 + block, n)
-                    g = m[i0:i1] @ m[j0:j1].T
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        sim = g / np.outer(nrm[i0:i1], nrm[j0:j1])
-                    match = sim >= tau
-                    gi = np.arange(i0, i1)[:, None]
-                    gj = np.arange(j0, j1)[None, :]
-                    ii, jj = np.nonzero(match & (gi < gj))
-                    out_a.append(ids[ii + i0])
-                    out_b.append(ids[jj + j0])
-        else:
-            a = pdf[pdf["__b"] == ga]
-            b = pdf[pdf["__b"] == gb]
-            if len(a) and len(b):
-                ida, idb = a["__id"].to_numpy(), b["__id"].to_numpy()
-                ma, mb = _mat(a["__v"]), _mat(b["__v"])
-                na = np.linalg.norm(ma, axis=1)
-                nb = np.linalg.norm(mb, axis=1)
-                for i0 in range(0, len(ida), block):
-                    i1 = min(i0 + block, len(ida))
-                    for j0 in range(0, len(idb), block):
-                        j1 = min(j0 + block, len(idb))
-                        g = ma[i0:i1] @ mb[j0:j1].T
-                        with np.errstate(divide="ignore",
-                                         invalid="ignore"):
-                            sim = g / np.outer(na[i0:i1], nb[j0:j1])
-                        ii, jj = np.nonzero(sim >= tau)
-                        la, lb = ida[ii + i0], idb[jj + j0]
-                        lower = la < lb
-                        out_a.append(np.where(lower, la, lb))
-                        out_b.append(np.where(lower, lb, la))
-        if not out_a:
-            return pd.DataFrame({"id_a": pdf["__id"][:0],
-                                 "id_b": pdf["__id"][:0]})
-        return pd.DataFrame({"id_a": np.concatenate(out_a),
-                             "id_b": np.concatenate(out_b)})
-
-    wc = Window.partitionBy("cluster")
-    salted = (base.withColumn("__cn", F.count(F.lit(1)).over(wc))
-              .withColumn("__s", F.ceil(F.col("__cn") / F.lit(max_group))
-                          .cast("int"))
-              .withColumn("__b", F.pmod(F.hash("__id"), F.col("__s"))
-                          .cast("int")))
-    groups = F.transform(
-        F.sequence(F.lit(0), F.col("__s") - 1),
-        lambda t: F.struct(F.least(t, F.col("__b")).alias("ga"),
-                           F.greatest(t, F.col("__b")).alias("gb")))
-    return (salted.select("cluster", "__b", "__id", "__v",
-                          F.explode(groups).alias("__g"))
-            .select("cluster", F.col("__g.ga").alias("__ga"),
-                    F.col("__g.gb").alias("__gb"), "__b", "__id", "__v")
-            .groupBy("cluster", "__ga", "__gb")
-            .applyInPandas(find_pairs, schema=out_schema))
+    return a["__id"].to_numpy(), b["__id"].to_numpy(), tiles()
 
 
 def _semdedup_centroid(assigned: DataFrame, cents: list, tau: float,
@@ -360,8 +302,8 @@ def _semdedup_centroid(assigned: DataFrame, cents: list, tau: float,
     to its cluster centroid (i.e. farthest from the centroid; lowest
     id breaks exact ties).  Pair generation shares the min-id path's
     kernels: ``"arrow"`` (default) emits pairs from the salted
-    blockwise gram kernel; ``"sql"`` is the pure-DataFrame
-    cross-check join."""
+    blockwise gram kernel (:func:`_pairs_arrow`); ``"sql"`` is the
+    pure-DataFrame cross-check join (:func:`_sql_pairs`)."""
     from pyspark.sql import Window
 
     from preql_spark.operators.dedup import connected_components
@@ -369,23 +311,9 @@ def _semdedup_centroid(assigned: DataFrame, cents: list, tau: float,
     base = assigned.select(F.col(id_col).alias("__id"), "cluster",
                            F.col(vec_col).alias("__v"),
                            norm(F.col(vec_col)).alias("__n"))
-    if pair_method == "arrow":
-        pairs = _pairs_arrow(base.select("__id", "cluster", "__v"),
-                             tau, max_group=max_group)
-    else:
-        left = base.select(F.col("__id").alias("id_a"), "cluster",
-                           F.col("__v").alias("__va"),
-                           F.col("__n").alias("__na"))
-        right = base.select(F.col("__id").alias("id_b"),
-                            F.col("cluster").alias("__cb"),
-                            F.col("__v").alias("__vb"),
-                            F.col("__n").alias("__nb"))
-        pairs = (left.join(right, (F.col("cluster") == F.col("__cb"))
-                           & (F.col("id_a") < F.col("id_b")))
-                 .filter(F.try_divide(
-                     dot(F.col("__va"), F.col("__vb")),
-                     F.col("__na") * F.col("__nb")) >= tau)
-                 .select("id_a", "id_b"))
+    pairs = (_pairs_arrow(base.select("__id", "cluster", "__v"), tau,
+                          max_group=max_group)
+             if pair_method == "arrow" else _sql_pairs(base, tau))
     comp = connected_components(pairs)  # (node, component)
 
     # cosine of every paired vector to its own cluster centroid —

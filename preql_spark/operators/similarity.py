@@ -159,38 +159,64 @@ def cosine_pairs(df: DataFrame, threshold: float,
 
 # ---- IVF scale path --------------------------------------------------------
 
-def _sq_full(v: Column, cent: list) -> Column:
-    """Sequential-fold squared distance between a full vector and a
-    literal centroid: ``aggregate(zip_with(v, cent, (a-b)*(a-b)))`` —
-    the HOF fold, kept after an r14 A/B showed an unrolled scalar
-    spelling is ~2× slower on Spark 4.1 (see :func:`_sq_sub`)."""
+def _sq_dist(v: Column, cent: list, start0: int | None = None) -> Column:
+    """Sequential-fold squared distance between a literal centroid and
+    ``v`` — the whole vector, or with ``start0`` the ``len(cent)``-wide
+    slice starting there (a PQ subspace):
+    ``aggregate(zip_with(v, cent, (a-b)*(a-b)))``.  The whole-vector
+    case emits no ``slice``.
+
+    (a-b)*(a-b), not **2: the multiply is correctly-rounded IEEE on
+    every engine, pow(x, 2) is only 1-ulp-accurate — this keeps the
+    k-means and PQ oracle mirrors bit-exact.
+
+    r14 measured note: an unrolled scalar spelling
+    (``0.0 + (v[i]-c0)² + ...`` via element_at) was tried and is
+    ~2-4× SLOWER than this aggregate(zip_with(...)) form on Spark 4.1
+    (A/B at sf0.1: pq_encode 0.56 s HOF vs 2.1 s unrolled; 8×64
+    assignment 0.31 s vs 0.54 s) — the HOF fold walks the array once,
+    while the big unrolled tree falls out of whole-stage codegen.
+    Keep the HOF spelling."""
+    part = v if start0 is None else F.slice(v, start0 + 1, len(cent))
     return F.aggregate(
-        F.zip_with(v, F.array(*[F.lit(x) for x in cent]),
-                   # (a-b)*(a-b), not **2: the multiply is
-                   # correctly-rounded IEEE on every engine,
-                   # pow(x, 2) is only 1-ulp-accurate — keeps
-                   # the k-means oracle mirror bit-exact
+        F.zip_with(part, F.array(*[F.lit(x) for x in cent]),
                    lambda a, b: ((a.cast("double") - b)
                                  * (a.cast("double") - b))),
-        F.lit(0.0), lambda acc, v2: acc + v2)
+        F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _staged_argmin(df: DataFrame, dists: dict, out_col: str,
+                   combine) -> DataFrame:
+    """The hof nearest-centroid argmin: each ``name -> array of
+    per-centroid distances`` column in ``dists`` is staged ONCE in its
+    own projection, and ``out_col = combine(positions)`` is appended,
+    where each position is the 1-based FIRST-min index
+    ``array_position(d, array_min(d))`` of one staged array.  The
+    staged arrays are dropped again.
+
+    Staging matters: each array is read twice (``array_position`` and
+    ``array_min``), and an inline spelling evaluated every distance
+    twice (r14 A/B at sf0.1: 0.67 s → 0.56 s for the PQ encode pass).
+    CollapseProject keeps the staged columns single-evaluated."""
+    staged = df.select("*", *[d.alias(n) for n, d in dists.items()])
+    pos = [F.array_position(F.col(n), F.array_min(F.col(n)))
+           for n in dists]
+    return staged.withColumn(out_col, combine(pos)).drop(*dists)
 
 
 def assign_cells_hof(frame: DataFrame, cents: list) -> DataFrame:
     """Exact nearest-centroid assignment over a ``(__id, __v)`` frame
-    — appends ``__cid`` (1-based, FIRST-min tie rule via
-    ``array_position``).  The hof argmin shared by :func:`ivf_build`'s
-    Lloyd loop and the streaming index ingest
-    (:func:`preql_spark.streaming.stream.incremental_ivf_ingest`), so
-    online assignment is bit-identical to the offline build's.
+    — appends ``__cid`` (1-based, FIRST-min tie rule).  The hof argmin
+    shared by :func:`ivf_build`'s Lloyd loop and the streaming index
+    ingest (:func:`preql_spark.streaming.stream.incremental_ivf_ingest`),
+    so online assignment is bit-identical to the offline build's.
     Scan-local: k literal centroid arrays broadcast inside the
-    expression, no shuffle (per-centroid fold: :func:`_sq_full`)."""
-    scored = frame.select(
-        "*",
-        F.array(*[_sq_full(F.col("__v"), c) for c in cents])
-        .alias("__d"))
-    return scored.select(
-        "*", F.array_position(F.col("__d"), F.array_min("__d"))
-        .cast("int").alias("__cid")).drop("__d")
+    expression, no shuffle (:func:`_staged_argmin` over
+    :func:`_sq_dist` folds)."""
+    return _staged_argmin(
+        frame, {"__d": F.array(*[_sq_dist(F.col("__v"), c)
+                                 for c in cents])},
+        "__cid", lambda pos: pos[0].cast("int"))
 
 
 def ivf_build(df: DataFrame, dim: int, n_centroids: int = 16,
@@ -206,18 +232,20 @@ def ivf_build(df: DataFrame, dim: int, n_centroids: int = 16,
     average.  Centroids are collected to the driver between rounds
     (n_centroids × dim floats — metadata-scale).
 
-    ``assign_method``:
+    The coarse quantizer is a product quantizer with one subspace
+    (IVFADC, Jégou et al. 2011), so assignment is the PQ argmin:
 
-    - ``"hof"`` (default): argmin over k literal arrays — pure
-      expressions, the shape the DuckDB oracle mirrors bit-exactly;
-      right up to k·dim ≈ 10⁵ (literal-expression-sized).
-    - ``"arrow"``: the LARGE-k path — distances as one batch matmul
-      (``‖v‖² − 2 v·C + ‖C‖²``) in ``mapInPandas``, centroids a
-      k×dim closure array instead of k literal expressions.  Same
-      first-min tie rule; the matmul's rounding can in principle
-      flip an argmin whose two best distances agree to an ulp
-      (equality pytest-checked on the fixtures — real corpora have
-      margins).
+    - ``"hof"`` (default): :func:`assign_cells_hof`, argmin over k
+      literal arrays — pure expressions, the shape the DuckDB oracle
+      mirrors bit-exactly; right up to k·dim ≈ 10⁵
+      (literal-expression-sized).
+    - ``"arrow"``: the LARGE-k path — :func:`pq_encode`'s batch-matmul
+      kernel with ``m = 1`` (``‖C‖² − 2 v·Cᵀ`` in ``mapInPandas``,
+      centroids a k×dim closure array instead of k literal
+      expressions), ``__cid = code + 1``.  Same first-min tie rule;
+      the matmul's rounding can in principle flip an argmin whose two
+      best distances agree to an ulp (equality pytest-checked on the
+      fixtures — real corpora have margins).
 
     Returns (assignments DataFrame (id, __cid, vec), centroids list).
     """
@@ -234,34 +262,13 @@ def ivf_build(df: DataFrame, dim: int, n_centroids: int = 16,
     centroids = [list(map(float, r["__v"])) for r in
                  base.orderBy("__id").limit(n_centroids).collect()]
 
-    assign_hof = assign_cells_hof
-
-    def assign_arrow(frame, cents):
-        import numpy as np
-
-        from pyspark.sql import types as T
-        cm = np.asarray(cents, dtype=np.float64)
-        cn2 = (cm * cm).sum(axis=1)
-        out_schema = T.StructType(
-            list(frame.schema.fields)
-            + [T.StructField("__cid", T.IntegerType())])
-
-        def kern(batches):
-            import pandas as pd
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-                # ‖v−c‖² up to the constant ‖v‖² (argmin-invariant)
-                d = cn2[None, :] - 2.0 * (m @ cm.T)
-                # np.argmin = FIRST min index — the array_position rule
-                pdf = pdf.copy()
-                pdf["__cid"] = (d.argmin(axis=1) + 1).astype("int32")
-                yield pdf
-
-        return frame.mapInPandas(kern, out_schema)
-
-    assign = assign_hof if assign_method == "hof" else assign_arrow
+    def assign(frame, cents):
+        if assign_method == "hof":
+            return assign_cells_hof(frame, cents)
+        enc = pq_encode(frame, [cents], id_col="__id", vec_col="__v",
+                        method="arrow")
+        return enc.select(*frame.columns, (F.col("pq_code")[0] + 1)
+                          .cast("int").alias("__cid"))
 
     for _ in range(iters):
         assigned = assign(base, centroids)
@@ -289,7 +296,7 @@ def _query_probes(queries: DataFrame, centroids: list, nprobe: int,
     dists = q.select(
         "*",
         F.posexplode(F.array(*[
-            _sq_full(F.col("__qv"), c)
+            _sq_dist(F.col("__qv"), c)
             for c in centroids])).alias("__cid0", "__qd"))
     wq = Window.partitionBy("query_id").orderBy("__qd", "__cid0")
     return (dists.withColumn("__pr", F.row_number().over(wq))
@@ -810,26 +817,6 @@ def pq_codebook(df: DataFrame, dim: int, m: int = 8, ksub: int = 16,
              for r in rows] for j in range(m)]
 
 
-def _sq_sub(v: Column, start0: int, sub: int, cent: list) -> Column:
-    """Sequential-fold squared distance between an array slice and a
-    literal centroid — (a-b)*(a-b), the cross-engine-exact spelling
-    (see ivf_build's assign_hof).
-
-    r14 measured note: an unrolled scalar spelling
-    (``0.0 + (v[i]-c0)² + ...`` via element_at) was tried and is
-    ~2-4× SLOWER than this aggregate(zip_with(...)) form on Spark 4.1
-    (A/B at sf0.1: pq_encode 0.56 s HOF vs 2.1 s unrolled; 8×64
-    assignment 0.31 s vs 0.54 s) — the HOF fold walks the array once,
-    while the big unrolled tree falls out of whole-stage codegen.
-    Keep the HOF spelling."""
-    return F.aggregate(
-        F.zip_with(F.slice(v, start0 + 1, sub),
-                   F.array(*[F.lit(x) for x in cent]),
-                   lambda a, b: ((a.cast("double") - b)
-                                 * (a.cast("double") - b))),
-        F.lit(0.0), lambda acc, x: acc + x)
-
-
 def pq_encode(df: DataFrame, codebook: list, id_col: str = "vec_id",
               vec_col: str = "embedding",
               method: str = "hof") -> DataFrame:
@@ -837,38 +824,26 @@ def pq_encode(df: DataFrame, codebook: list, id_col: str = "vec_id",
     centroid per subspace, first-min tie rule).  Adds ``pq_code``
     (array<int>, length m) next to the input columns.
 
-    ``method="hof"``: m x ksub literal argmin expressions — scan-local
-    whole-stage codegen, zero shuffle, and the spelling the DuckDB
-    oracle mirrors bit-exactly.  Right while m·ksub·sub = dim·ksub
-    stays literal-expression-sized (~10^5).  r14: each subspace's
-    ksub-distance array is materialized ONCE in an intermediate
-    projection and the argmin reads that column — the pre-r14 inline
-    spelling evaluated every distance twice (once under
-    array_position, once under array_min), doubling the per-row work
-    (A/B at sf0.1: 0.67 s → 0.56 s for the encode pass).
+    ``method="hof"``: m x ksub literal argmin expressions
+    (:func:`_staged_argmin` over :func:`_sq_dist` subspace folds) —
+    scan-local whole-stage codegen, zero shuffle, and the spelling the
+    DuckDB oracle mirrors bit-exactly.  Right while m·ksub·sub =
+    dim·ksub stays literal-expression-sized (~10^5).
 
     ``method="arrow"``: the large-ksub path — per-subspace batch
     matmuls (one ksub x sub GEMM per Arrow batch per subspace),
     following the proven per-row-O(k·dim)-belongs-in-BLAS rule from
-    ivf_build/signature_frame."""
+    signature_frame.  With ``m = 1`` this is :func:`ivf_build`'s
+    large-k assignment."""
     m = len(codebook)
     sub = len(codebook[0][0])
     if method == "hof":
-        dist_cols = [
-            F.array(*[_sq_sub(F.col(vec_col), j * sub, sub, c)
-                      for c in codebook[j]]).alias(f"__pqd{j}")
-            for j in range(m)]
-        # two-step projection: CollapseProject keeps the expensive
-        # __pqd arrays single-evaluated because each is referenced
-        # twice below (array_position + array_min)
-        staged = df.select("*", *dist_cols)
-        code = F.array(*[
-            (F.array_position(F.col(f"__pqd{j}"),
-                              F.array_min(F.col(f"__pqd{j}")))
-             - 1).cast("int")
-            for j in range(m)])
-        return (staged.withColumn("pq_code", code)
-                .drop(*[f"__pqd{j}" for j in range(m)]))
+        return _staged_argmin(
+            df, {f"__pqd{j}": F.array(*[
+                _sq_dist(F.col(vec_col), c, j * sub)
+                for c in codebook[j]]) for j in range(m)},
+            "pq_code",
+            lambda pos: F.array(*[(p - 1).cast("int") for p in pos]))
     if method != "arrow":
         raise ValueError(f"method must be hof/arrow, got {method!r}")
     import numpy as np
@@ -888,6 +863,7 @@ def pq_encode(df: DataFrame, codebook: list, id_col: str = "vec_id",
             codes = np.empty((len(pdf), cb.shape[0]), dtype=np.int32)
             for j in range(cb.shape[0]):
                 s = v[:, j * sub:(j + 1) * sub]
+                # ‖s−c‖² up to the constant ‖s‖² (argmin-invariant)
                 d = cn2[j][None, :] - 2.0 * (s @ cb[j].T)
                 codes[:, j] = d.argmin(axis=1)         # first-min rule
             pdf = pdf.copy()
@@ -985,7 +961,6 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                 dim: int = 64, n_centroids: int = 8, iters: int = 2,
                 nprobe: int = 2, m: int = 8, ksub: int = 16,
                 id_col: str = "vec_id", vec_col: str = "embedding",
-                encode_method: str = "hof",
                 tie_digits: int | None = None) -> DataFrame:
     """IVF-PQ search (the IVFADC architecture of Jegou et al. 2011,
     §IV, without the residual step so the whole pipeline stays
@@ -1004,16 +979,31 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
     Returns ``(query_id, vec_id, dist, rank)`` over candidates from
     the probed cells only (self-matches included, like pq_adc_topk).
+
+    The encode is the oracle-exact hof spelling.  A BLAS encode is a
+    composition: :func:`ivf_build`, then ``pq_encode(assigned, cb,
+    id_col="__id", vec_col="__v", method="arrow")``, then
+    :func:`_ivf_pq_search` (``tools/measure_pq.py`` does this).
     """
     assigned, centroids = ivf_build(corpus, dim, n_centroids,
                                     iters=iters, id_col=id_col,
                                     vec_col=vec_col)
     cb = pq_codebook(corpus, dim, m=m, ksub=ksub, id_col=id_col,
                      vec_col=vec_col)
-    enc = pq_encode(assigned, cb, id_col="__id", vec_col="__v",
-                    method=encode_method)
+    enc = pq_encode(assigned, cb, id_col="__id", vec_col="__v")
+    return _ivf_pq_search(enc, centroids, cb, queries, k, nprobe,
+                          id_col, vec_col, tie_digits)
+
+
+def _ivf_pq_search(enc: DataFrame, centroids: list, cb: list,
+                   queries: DataFrame, k: int, nprobe: int,
+                   id_col: str, vec_col: str,
+                   tie_digits: int | None) -> DataFrame:
+    """The search half of :func:`ivf_pq_topk` over an encoded
+    ``(__id, __cid, pq_code)`` frame: probe, broadcast LUT join, ADC
+    distance, per-query TakeOrdered."""
     probes = _query_probes(queries, centroids, nprobe, id_col, vec_col)
-    lut_df = _pq_luts(corpus.sparkSession, queries, cb, id_col, vec_col)
+    lut_df = _pq_luts(enc.sparkSession, queries, cb, id_col, vec_col)
     dist = F.aggregate(
         F.zip_with(F.col("pq_code"), F.col("__lut"),
                    lambda c, l: F.element_at(l, c + 1)),

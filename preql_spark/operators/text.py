@@ -1654,7 +1654,6 @@ def hybrid_search(docs: DataFrame, embeddings: DataFrame,
                   vec_id_col: str = "vec_id", vec_col: str = "embedding",
                   require_all: bool = True,
                   tie_digits: int | None = None,
-                  dense_method: str = "hof",
                   weights: list[float] | None = None) -> DataFrame:
     """Hybrid lexical+dense retrieval: BM25 :func:`ranked_search` over
     ``docs`` and cosine top-n over ``embeddings`` (query = the stored
@@ -1662,20 +1661,19 @@ def hybrid_search(docs: DataFrame, embeddings: DataFrame,
     fused top-``k`` ``(id, rrf_score, rank)``.
 
     The two legs carry the corpus-scale cost and are the already
-    scale-analyzed operators (BM25's two partial-agg shuffles;
-    brute/BLAS cosine scan — swap in ``ivf_pq_topk`` upstream when
-    vectors outgrow the scan budget and feed its output straight to
-    :func:`rrf_fuse`).  ``dense_method="arrow"`` uses the BLAS
-    batch-matmul top-k; the default "hof" keeps the sequential-fold
-    scoring that is bit-identical to the SQL oracle."""
-    from .similarity import cosine_topk, cosine_topk_arrow
+    scale-analyzed operators (BM25's two partial-agg shuffles; the
+    brute cosine scan, whose sequential-fold scoring is bit-identical
+    to the SQL oracle).  Other dense legs are compositions: feed
+    ``cosine_topk_arrow`` (the BLAS batch-matmul top-k) or
+    ``ivf_pq_topk`` (when vectors outgrow the scan budget) straight to
+    :func:`rrf_fuse` beside :func:`ranked_search`."""
+    from .similarity import cosine_topk
     lex = ranked_search(docs, query_text, k=n_cand, id_col=id_col,
                         text_col=text_col, require_all=require_all,
                         tie_digits=tie_digits)
     qv = embeddings.filter(F.col(vec_id_col) == query_vec_id)
-    dense_fn = cosine_topk_arrow if dense_method == "arrow" else cosine_topk
-    den = (dense_fn(embeddings, qv, k=n_cand, id_col=vec_id_col,
-                    vec_col=vec_col)
+    den = (cosine_topk(embeddings, qv, k=n_cand, id_col=vec_id_col,
+                       vec_col=vec_col)
            .select(F.col("neighbor_id").alias(id_col), "rank"))
     return rrf_fuse([lex.select(id_col, "rank"), den],
                     k=k, rrf_k=rrf_k, id_col=id_col, weights=weights)

@@ -4,21 +4,15 @@ The naive spelling — ``row_number() OVER (PARTITION BY g ORDER BY v)``
 then ``rank <= k`` — shuffles EVERY row to its group and fully sorts
 each group, to keep k rows.  At 100 TB that window exchange is the
 query.  Spark's ``TakeOrderedAndProject`` solves this for the GLOBAL
-top-k only; these operators give grouped queries the same
-partial-before-exchange shape:
+top-k only; this operator gives grouped queries the same
+partial-before-exchange shape: one ObjectHashAggregate —
+``slice(array_sort(collect_list(struct)), 1, k)`` — whose map-side
+PARTIAL combine means each partition ships one list row per group
+(the q113 contrastive-miner pattern, extracted).
 
-- ``method="agg"``: one ObjectHashAggregate —
-  ``slice(array_sort(collect_list(struct)), 1, k)`` — whose map-side
-  PARTIAL combine means each partition ships one list row per group
-  (the q113 contrastive-miner pattern, extracted).
-- ``method="arrow"``: a partition-local pandas truncation first, so
-  the shuffle carries at most k rows per (partition, group) even when
-  single groups hold millions of rows — the huge-group path where the
-  agg spelling's per-group lists would not fit an aggregation buffer.
-
-Both produce identical results (pytest-equal) with the deterministic
-(order desc, tie asc) contract; no reference equivalent (Preql stops
-at global limit/order).
+The result follows the deterministic (order desc, tie asc)
+contract; no reference equivalent (Preql stops at global
+limit/order).
 """
 
 from __future__ import annotations
@@ -30,8 +24,7 @@ from pyspark.sql import functions as F
 def topk_per_group(df: DataFrame, group_cols: list[str],
                    order_col: str, k: int,
                    tie_col: str | None = None,
-                   descending: bool = True,
-                   method: str = "agg") -> DataFrame:
+                   descending: bool = True) -> DataFrame:
     """Top-``k`` rows per group by ``order_col`` (desc by default),
     ties broken by ascending ``tie_col``; returns the original
     columns plus ``rank`` (1-based within the group).
@@ -47,10 +40,10 @@ def topk_per_group(df: DataFrame, group_cols: list[str],
     if order_col not in payload and order_col not in group_cols:
         raise ValueError(f"unknown order column {order_col!r}")
     # NULL order/tie values rank LAST (both directions) — matching the
-    # row_number-window oracle's desc_nulls_last/asc_nulls_last and the
-    # arrow path's pandas na_position='last'.  Without the flag, struct
-    # comparison treats a NULL field as smallest, which in descending
-    # mode would silently rank NULL rows FIRST and displace real rows.
+    # row_number-window oracle's desc_nulls_last/asc_nulls_last.
+    # Without the flag, struct comparison treats a NULL field as
+    # smallest, which in descending mode would silently rank NULL rows
+    # FIRST and displace real rows.
     okey = (-F.col(order_col) if descending else F.col(order_col))
     skey = [F.col(order_col).isNull().cast("int").alias("__on"),
             okey.alias("__ok")]
@@ -59,38 +52,7 @@ def topk_per_group(df: DataFrame, group_cols: list[str],
         skey.append(F.col(tie_col).alias("__tk"))
     struct_fields = skey + [F.col(c).alias(c) for c in payload]
 
-    base = df
-    if method == "arrow":
-        from pyspark.sql import types as T
-
-        in_cols = list(df.columns)
-        schema = T.StructType([df.schema[c] for c in in_cols])
-        asc = [True] * (2 if tie_col is not None else 1)
-        sort_cols = [order_col] + ([tie_col] if tie_col is not None
-                                   else [])
-        sort_asc = [not descending] + ([True] if tie_col is not None
-                                       else [])
-
-        def kern(batches):
-            import pandas as pd
-            state = None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                both = pdf if state is None else pd.concat(
-                    [state, pdf], ignore_index=True)
-                state = (both.sort_values(sort_cols, ascending=sort_asc,
-                                          kind="mergesort")
-                         .groupby(group_cols, sort=False, dropna=False)
-                         .head(k))
-            if state is not None:
-                yield state[in_cols]
-
-        base = df.mapInPandas(kern, schema)
-    elif method != "agg":
-        raise ValueError(f"method must be agg/arrow, got {method!r}")
-
-    agg = (base.groupBy(*group_cols)
+    agg = (df.groupBy(*group_cols)
            .agg(F.slice(F.array_sort(F.collect_list(
                F.struct(*struct_fields))), 1, k).alias("__top")))
     exploded = agg.select(

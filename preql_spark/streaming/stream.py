@@ -463,8 +463,7 @@ def incremental_neardup_ingest(spark: SparkSession, src_path: str,
                                shingle_k: int = 3,
                                threshold: float = 0.9,
                                max_bucket: int = 200,
-                               state_path: str | None = None,
-                               shingle_mode: str = "string") -> DataFrame:
+                               state_path: str | None = None) -> DataFrame:
     """Incremental corpus ingestion that drops NEAR-duplicates (not
     just exact ones) against everything already seen — the streaming
     face of :func:`preql_spark.operators.dedup.minhash_lsh_pairs`.
@@ -493,43 +492,38 @@ def incremental_neardup_ingest(spark: SparkSession, src_path: str,
     Idempotence: a replayed batch (checkpoint recovery) is id-anti-
     joined against the state first, so it appends nothing.
 
-    ``shingle_mode`` sets what the state's per-document shingle set
-    stores for the exact-Jaccard verify: ``"string"`` (default) keeps
-    the shingle text — byte-exact equality with the batch operators;
-    ``"hash"`` keeps 8-byte xxhash64 values — the 100 TB path (state
-    size per doc drops to 8 B × distinct shingles, and set-Jaccard
-    over hashes equals string-Jaccard up to a ~2⁻⁶⁴-per-pair
-    collision; pytest asserts the two modes agree on the fixtures)."""
+    The state's per-document shingle set keeps the shingle text
+    (``sh: array<string>``) — byte-exact equality with the batch
+    operators' exact-Jaccard verify.  A state whose ``sh`` has another
+    type (the hashed ``array<bigint>`` state of the removed
+    ``shingle_mode="hash"``) is refused; MIGRATION.md says how to
+    rebuild it."""
     from pyspark.sql import Window
 
     from preql_spark.operators.dedup import (minhash_signature_df,
                                              shingles_from_tokens)
     from preql_spark.operators.text import tokens
 
-    if shingle_mode not in ("string", "hash"):
-        raise ValueError(
-            f"shingle_mode must be string/hash, got {shingle_mode!r}")
     if bands < 1 or n_hashes % bands:
         raise ValueError(
             f"bands must divide n_hashes, got {n_hashes}/{bands}")
     state_path = state_path or store_path.rstrip("/") + "_state"
     rows_per_band = n_hashes // bands
-    # a state built under the other shingle_mode must be rejected, not
-    # coerced: unionByName would silently cast the state's sh column
-    # (array<long> vs array<string>) to strings, making every
-    # cross-wave Jaccard 0 — near-dups of earlier waves get ACCEPTED
+    # a state with hashed shingles must be rejected, not coerced:
+    # unionByName would silently cast the state's array<bigint> sh
+    # column to strings, making every cross-wave Jaccard 0 — near-dups
+    # of earlier waves get ACCEPTED
     if hadoop_dir_has_files(spark, state_path):
-        from pyspark.sql.types import ArrayType, LongType, StringType
+        from pyspark.sql.types import ArrayType, StringType
         have = spark.read.parquet(state_path).schema["sh"].dataType
-        want = ArrayType(StringType() if shingle_mode == "string"
-                         else LongType(), True)
         if not isinstance(have, ArrayType) or \
-                have.elementType != want.elementType:
+                have.elementType != StringType():
             raise ValueError(
                 f"state at {state_path} stores sh: {have.simpleString()}"
-                f" but shingle_mode={shingle_mode!r} needs "
-                f"{want.simpleString()} — re-invoke with the mode the "
-                "state was built with, or point at a fresh state_path")
+                " but this ingest needs array<string> — the hashed "
+                "shingle state is no longer read; rebuild it by "
+                "re-ingesting the source into a fresh state_path and "
+                "checkpoint (MIGRATION.md, \"Removed options\")")
     schema = _source_schema(spark, src_path, checkpoint)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
@@ -539,14 +533,11 @@ def incremental_neardup_ingest(spark: SparkSession, src_path: str,
         # tokenize in its own projection: shingling slices the token
         # array per shingle, and an inline tokens() expression would
         # re-run the regex split for every slice
-        sh_text = shingles_from_tokens(F.col("__t"), shingle_k)
-        sh_col = sh_text if shingle_mode == "string" else \
-            F.array_distinct(F.transform(sh_text,
-                                         lambda x: F.xxhash64(x)))
         sh = (batch.select(F.col(id_col).alias("__id"),
                            tokens(F.coalesce(F.col(text_col), F.lit("")))
                            .alias("__t"))
-              .select("__id", sh_col.alias("__sh")).persist())
+              .select("__id", shingles_from_tokens(F.col("__t"), shingle_k)
+                      .alias("__sh")).persist())
         new_state = None
         try:
             sig = minhash_signature_df(sh, "__id", "__sh", n_hashes,
@@ -565,9 +556,8 @@ def incremental_neardup_ingest(spark: SparkSession, src_path: str,
                         F.coalesce(F.col("__bands"),
                                    F.array().cast("array<int>"))
                         .alias("bands"),
-                        F.coalesce(F.col("__sh"), F.array().cast(
-                            "array<string>" if shingle_mode == "string"
-                            else "array<long>"))
+                        F.coalesce(F.col("__sh"),
+                                   F.array().cast("array<string>"))
                         .alias("sh")).persist()
             batch_banded = new_state.select(
                 F.col(id_col).alias("__id"), F.lit(False).alias("__st"),
@@ -804,71 +794,85 @@ def _source_schema(spark: SparkSession, src_path: str,
     marker still wins (the pin is the contract, the argument is only
     the infer shortcut).
 
-    The marker write is ATOMIC (temp file + rename): a crash
-    mid-write can no longer strand a truncated marker that every
-    later call chokes on — and if one exists from a pre-atomic
-    release, the unparseable read falls through to re-infer and
-    rewrite instead of raising forever."""
+    The marker is written by :func:`_marker` (temp file + rename, a
+    zero-byte marker counts as absent).  A truncated or corrupt marker
+    left by a pre-atomic release fails to parse, is deleted, and the
+    schema is re-inferred and re-pinned instead of raising forever."""
     import json
 
     from pyspark.sql.types import StructType
 
-    fs, cp = _hadoop_fs_path(spark, checkpoint)
-    jpath = _jpath_cls(spark)
     mpath = checkpoint.rstrip("/") + "/__source_schema"
-    marker = jpath(mpath)
+
+    def pin() -> str:
+        return json.dumps((schema or spark.read.parquet(src_path).schema)
+                          .jsonValue())
+
+    def load() -> StructType:
+        return StructType.fromJson(json.loads(
+            _marker(spark, mpath, pin, limit=1 << 24)))
+
+    try:
+        return load()
+    except Exception:
+        # json/StructType parse errors, or a read-side
+        # ChecksumException from Hadoop's checksummed local FS (a torn
+        # write tears the .crc sidecar too).  A failed infer leaves no
+        # marker and re-raises.
+        fs, marker = _hadoop_fs_path(spark, mpath)
+        if not fs.exists(marker):
+            raise
+        fs.delete(marker, False)
+    return load()
+
+
+def _marker(spark: SparkSession, path: str, make,
+            limit: int = 65536) -> str:
+    """Read-or-create the small marker file at ``path`` (source
+    schema, run id, gate fingerprint): its text when it exists and is
+    non-empty — one ``exists`` and one read, the every-wave path —
+    else ``make()``, written to ``<path>.tmp`` and renamed into place.
+
+    The rename makes the write atomic: a crash mid-write leaves at
+    most a stray temp file, never a torn marker.  A zero-byte marker
+    (a bare-create crash in a release before this helper) counts as
+    absent, because no writer produces an empty value; it is deleted
+    first, since a Hadoop rename does not overwrite.  Losing a
+    creation race returns the winner's text, so every caller in one
+    lineage sees one value."""
+    fs, marker = _hadoop_fs_path(spark, path)
     if fs.exists(marker):
-        try:
-            return StructType.fromJson(
-                json.loads(_read_marker_text(spark, fs, marker,
-                                             limit=1 << 24)))
-        except Exception:
-            # empty/truncated/corrupt marker (crash mid-write in a
-            # pre-atomic release): json/StructType parse errors, or a
-            # read-side ChecksumException from Hadoop's checksummed
-            # local FS (a torn write tears the .crc sidecar too).
-            # Either way the pin is unusable — re-infer and re-pin.
-            fs.delete(marker, False)
-    if schema is None:
-        schema = spark.read.parquet(src_path).schema
-    fs.mkdirs(cp)
-    tmp = jpath(mpath + ".tmp")
+        text = _read_marker_text(spark, fs, marker, limit)
+        if text:
+            return text
+        fs.delete(marker, False)
+    text = make()
+    tmp = _jpath_cls(spark)(path + ".tmp")
     out = fs.create(tmp, True)
     try:
-        out.write(bytearray(json.dumps(schema.jsonValue()).encode()))
+        out.write(bytearray(text.encode()))
     finally:
         out.close()
-    if not fs.rename(tmp, marker):
-        # lost a (benign) creation race: another call pinned first —
-        # same lineage, same source, same schema; drop the temp
-        fs.delete(tmp, False)
-    return schema
+    if fs.rename(tmp, marker):
+        return text
+    fs.delete(tmp, False)
+    return _read_marker_text(spark, fs, marker, limit)
 
 
 def _ingest_run_id(spark: SparkSession, checkpoint: str) -> str:
     """Stable id for THIS checkpoint lineage: a uuid minted once and
-    stored inside the checkpoint dir, so the append-only ingest
-    states can key their replay guards on (run_id, batch_id).  Epoch
-    ids alone are not enough — a recreated/relocated checkpoint
-    restarts epochs at 0, and a bare batch_id guard would then drop
-    NEW data as "already folded" while still marking it ingested.
-    A fresh checkpoint mints a fresh run_id, so its epochs can never
-    collide with state written under the old lineage."""
+    stored inside the checkpoint dir (:func:`_marker`), so the
+    append-only ingest states can key their replay guards on
+    (run_id, batch_id).  Epoch ids alone are not enough — a
+    recreated/relocated checkpoint restarts epochs at 0, and a bare
+    batch_id guard would then drop NEW data as "already folded" while
+    still marking it ingested.  A fresh checkpoint mints a fresh
+    run_id, so its epochs can never collide with state written under
+    the old lineage."""
     import uuid
 
-    fs, cp = _hadoop_fs_path(spark, checkpoint)
-    marker = _jpath_cls(spark)(
-        checkpoint.rstrip("/") + "/__ingest_run_id")
-    if fs.exists(marker):
-        return _read_marker_text(spark, fs, marker, limit=64)
-    rid = uuid.uuid4().hex
-    fs.mkdirs(cp)
-    out = fs.create(marker, True)
-    try:
-        out.write(bytearray(rid.encode()))
-    finally:
-        out.close()
-    return rid
+    return _marker(spark, checkpoint.rstrip("/") + "/__ingest_run_id",
+                   lambda: uuid.uuid4().hex, limit=64)
 
 
 def _bridge_legacy_state(st: DataFrame) -> DataFrame:
@@ -1608,23 +1612,15 @@ def _gate_fingerprint_guard(spark: SparkSession, path: str,
     fp = json.dumps({"gate": gate, **gate_kwargs},
                     sort_keys=True, default=_enc)
     fp_file = path.rstrip("/") + "__gate_fp"
-    fs, marker = _hadoop_fs_path(spark, fp_file)
-    if fs.exists(marker):
-        old = _read_marker_text(spark, fs, marker)
-        if old != fp:
-            raise ValueError(
-                f"gate-config drift: the state at {path} was built "
-                f"with {old} but this run passes {fp}.  Mixing two "
-                f"gate definitions in one monitor corrupts the "
-                f"report; keep the original parameters, or delete "
-                f"the state and {fp_file} to restart under the new "
-                f"ones.")
-        return
-    out = fs.create(marker, True)
-    try:
-        out.write(bytearray(fp.encode()))
-    finally:
-        out.close()
+    old = _marker(spark, fp_file, lambda: fp)
+    if old != fp:
+        raise ValueError(
+            f"gate-config drift: the state at {path} was built "
+            f"with {old} but this run passes {fp}.  Mixing two "
+            f"gate definitions in one monitor corrupts the "
+            f"report; keep the original parameters, or delete "
+            f"the state and {fp_file} to restart under the new "
+            f"ones.")
 
 
 def incremental_gate_rate_ingest(

@@ -2706,17 +2706,22 @@ def test_hll_sketch_rollup(spark, eng):
 
 def test_semdedup_zero_norm_policy(spark):
     """A zero-norm vector has undefined cosine: it never matches and
-    never causes a crash — and BOTH pair methods agree on that."""
+    never causes a crash — and BOTH pair methods agree on that, under
+    both keep rules (the drops and the pairs consumer of the shared
+    gram kernel)."""
     from preql_spark.operators.cluster import semdedup
     rows = [(i, [float(i + 1)] * 4) for i in range(6)]
     rows.append((6, [0.0, 0.0, 0.0, 0.0]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = {r.vec_id for r in semdedup(
-        df, tau=0.9, k=2, iters=1, pair_method="arrow").collect()}
-    s = {r.vec_id for r in semdedup(
-        df, tau=0.9, k=2, iters=1, pair_method="sql").collect()}
-    assert a == s
-    assert 6 in a  # the zero vector always survives
+    for keep in ("min_id", "far_from_centroid"):
+        a = {r.vec_id for r in semdedup(
+            df, tau=0.9, k=2, iters=1, keep=keep,
+            pair_method="arrow").collect()}
+        s = {r.vec_id for r in semdedup(
+            df, tau=0.9, k=2, iters=1, keep=keep,
+            pair_method="sql").collect()}
+        assert a == s, keep
+        assert 6 in a, keep  # the zero vector always survives
 
 
 def test_semdedup_centroid_rule_arrow_equals_sql(eng, emb):
@@ -3026,10 +3031,6 @@ def test_hybrid_search_fuses_legs(spark):
         [lex.select("doc_id", "rank"), den], k=5)
     assert sorted(map(tuple, out.collect())) \
         == sorted(map(tuple, manual.collect()))
-    arrow = text.hybrid_search(docs, emb, "alpha beta", 0, k=5,
-                               n_cand=3, dense_method="arrow")
-    assert sorted(map(tuple, arrow.collect())) \
-        == sorted(map(tuple, out.collect()))
 
 
 def test_random_project_arrow_matches_hof(spark):
@@ -3158,7 +3159,7 @@ def test_scrub_contaminated_spans_plan_broadcast(spark):
 
 
 def test_topk_per_group_matches_window(spark):
-    """Both topk_per_group paths equal the row_number-window spelling
+    """topk_per_group equals the row_number-window spelling
     (deterministic tie contract), including groups smaller than k."""
     from preql_spark.operators.topk import topk_per_group
     rows = [(g, i, float((i * 7) % 5)) for g in ("a", "b", "c")
@@ -3172,30 +3173,10 @@ def test_topk_per_group_matches_window(spark):
               .filter("rank <= 4").collect()}
     got_agg = {(r.g, r.id, r.v, r.rank) for r in
                topk_per_group(df, ["g"], "v", 4, tie_col="id").collect()}
-    got_arr = {(r.g, r.id, r.v, r.rank) for r in
-               topk_per_group(df, ["g"], "v", 4, tie_col="id",
-                              method="arrow").collect()}
-    assert got_agg == want and got_arr == want
+    assert got_agg == want
     import pytest as _pt
     with _pt.raises(ValueError, match="k must be"):
         topk_per_group(df, ["g"], "v", 0)
-    with _pt.raises(ValueError, match="agg/arrow"):
-        topk_per_group(df, ["g"], "v", 2, method="nope")
-
-
-def test_topk_per_group_arrow_bounds_shuffle(spark):
-    """The arrow path's pre-truncation emits at most k rows per
-    (partition, group) into the final aggregation."""
-    from preql_spark.operators.topk import topk_per_group
-    df = spark.createDataFrame(
-        [("g", i, float(i)) for i in range(10_000)],
-        "g: string, id: long, v: double").repartition(4)
-    out = topk_per_group(df, ["g"], "v", 3, tie_col="id",
-                         method="arrow")
-    rows = out.collect()
-    assert [(r.id, r.rank) for r in
-            sorted(rows, key=lambda r: r.rank)] \
-        == [(9999, 1), (9998, 2), (9997, 3)]
 
 
 def test_dsir_composition_deterministic(spark):
@@ -3547,9 +3528,9 @@ def test_budget_select_and_temperature_null_handling(spark, eng):
 
 
 def test_topk_per_group_null_order_values(spark):
-    """NULL order values rank LAST in both directions on both paths
-    (r6 advice: struct comparison treated NULL as smallest, silently
-    ranking NULL rows FIRST in descending mode)."""
+    """NULL order values rank LAST in both directions (r6 advice:
+    struct comparison treated NULL as smallest, silently ranking NULL
+    rows FIRST in descending mode)."""
     from pyspark.sql import Window
     from preql_spark.operators.topk import topk_per_group
     rows = [("a", 1, 7.0), ("a", 2, None), ("a", 3, 5.0),
@@ -3564,22 +3545,22 @@ def test_topk_per_group_null_order_values(spark):
         want = {(r.g, r.id, r.rank) for r in
                 df.withColumn("rank", F.row_number().over(w))
                   .filter("rank <= 2").collect()}
-        for method in ("agg", "arrow"):
-            got = {(r.g, r.id, r.rank) for r in
-                   topk_per_group(df, ["g"], "v", 2, tie_col="id",
-                                  descending=desc,
-                                  method=method).collect()}
-            assert got == want, (desc, method, got, want)
-    # NULL tie values must also agree across paths (nulls-last)
+        got = {(r.g, r.id, r.rank) for r in
+               topk_per_group(df, ["g"], "v", 2, tie_col="id",
+                              descending=desc).collect()}
+        assert got == want, (desc, got, want)
+    # NULL tie values rank last too (the window's asc_nulls_last)
     df2 = spark.createDataFrame(
         [("a", i, 1.0, None if i % 2 else i) for i in range(6)],
         "g: string, id: long, v: double, t: long").repartition(3)
-    a = {(r.g, r.id, r.rank) for r in
-         topk_per_group(df2, ["g"], "v", 3, tie_col="t").collect()}
-    b = {(r.g, r.id, r.rank) for r in
-         topk_per_group(df2, ["g"], "v", 3, tie_col="t",
-                        method="arrow").collect()}
-    assert a == b
+    w2 = Window.partitionBy("g").orderBy(F.col("v").desc_nulls_last(),
+                                         F.col("t").asc_nulls_last())
+    want2 = {(r.g, r.id, r.rank) for r in
+             df2.withColumn("rank", F.row_number().over(w2))
+                .filter("rank <= 3").collect()}
+    got2 = {(r.g, r.id, r.rank) for r in
+            topk_per_group(df2, ["g"], "v", 3, tie_col="t").collect()}
+    assert got2 == want2 == {("a", 0, 1), ("a", 2, 2), ("a", 4, 3)}
 
 
 def test_phrase_search_punctuated_terms(spark):

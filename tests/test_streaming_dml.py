@@ -627,44 +627,12 @@ def test_incremental_neardup_store_guard_after_lost_state(spark, eng,
     assert out2.select("doc_id").distinct().count() == n1
 
 
-def test_incremental_neardup_hash_state_mode(spark, eng, tmp_path):
-    """shingle_mode='hash' (8-byte state, the 100 TB path) must keep
-    the same survivors as the string mode on the fixtures."""
-    from preql_spark.streaming.stream import incremental_neardup_ingest
-    docs = eng.t.documents.df.select("doc_id", "text") \
-        .filter(F.col("doc_id") < 300)
-
-    def run(mode, sub):
-        src = str(tmp_path / sub / "src")
-        store = str(tmp_path / sub / "store")
-        docs.filter(F.col("doc_id") < 150).write.mode("overwrite") \
-            .parquet(src)
-        incremental_neardup_ingest(spark, src, store,
-                                   str(tmp_path / sub / "ck"),
-                                   threshold=0.9, shingle_mode=mode)
-        docs.filter(F.col("doc_id") >= 150).write.mode("append") \
-            .parquet(src)
-        out = incremental_neardup_ingest(spark, src, store,
-                                         str(tmp_path / sub / "ck"),
-                                         threshold=0.9,
-                                         shingle_mode=mode)
-        return {r.doc_id for r in out.select("doc_id").collect()}
-
-    a = run("string", "s")
-    b = run("hash", "h")
-    assert a == b and len(a) < 300      # some near-dups were dropped
-    import pytest as _pt
-    with _pt.raises(ValueError, match="shingle_mode"):
-        incremental_neardup_ingest(spark, str(tmp_path / "x"),
-                                   str(tmp_path / "y"),
-                                   str(tmp_path / "z"),
-                                   shingle_mode="nope")
-
-
 def test_incremental_neardup_rejects_mode_mismatch(spark, tmp_path):
-    """A state built under one shingle_mode must refuse the other:
-    unionByName would coerce array<long>/array<string> to strings and
-    silently accept near-dups of earlier waves (cross-wave Jaccard 0)."""
+    """A state whose shingle sets are hashed (``sh: array<bigint>``,
+    written by the removed hash mode) must be refused: unionByName
+    would coerce array<bigint> to strings and silently accept
+    near-dups of earlier waves (cross-wave Jaccard 0).  The error
+    names the migration."""
     import pytest as _pt
 
     from preql_spark.streaming.stream import incremental_neardup_ingest
@@ -674,14 +642,17 @@ def test_incremental_neardup_rejects_mode_mismatch(spark, tmp_path):
     rows = [(1, "alpha beta gamma delta epsilon zeta eta theta")]
     spark.createDataFrame(rows, "doc_id long, text string") \
         .write.mode("overwrite").parquet(src)
-    incremental_neardup_ingest(spark, src, store, ck,
-                               shingle_mode="string")
-    with _pt.raises(ValueError, match="shingle_mode"):
+    hashed = str(tmp_path / "hashed_state")
+    spark.createDataFrame(
+        [(1, [11, 12], [101, 102])],
+        "doc_id long, bands array<int>, sh array<bigint>") \
+        .write.mode("overwrite").parquet(hashed)
+    with _pt.raises(ValueError, match="MIGRATION.md"):
         incremental_neardup_ingest(spark, src, store, ck,
-                                   shingle_mode="hash")
-    # and the matching mode still replays cleanly (idempotent no-op)
-    out = incremental_neardup_ingest(spark, src, store, ck,
-                                     shingle_mode="string")
+                                   state_path=hashed)
+    # a string state still replays cleanly (idempotent no-op)
+    incremental_neardup_ingest(spark, src, store, ck)
+    out = incremental_neardup_ingest(spark, src, store, ck)
     assert out.count() == 1
 
 
@@ -1807,6 +1778,42 @@ def test_incremental_curation_ingest(spark, eng, tmp_path):
     with pytest.raises(ValueError, match="unknown gate"):
         incremental_curation_ingest(
             spark, src, str(tmp_path / "ck2"), store, gate="nope")
+
+
+def test_zero_byte_markers_count_as_absent(spark, eng, tmp_path):
+    """A zero-byte ``<store>__gate_fp`` and a zero-byte
+    ``__ingest_run_id`` (a crash between create and write in a release
+    that wrote markers in place) are absent markers, not values: the
+    curation ingest succeeds, mints a 32-hex run id that the ids
+    sidecar carries, and re-pins the gate fingerprint, which then
+    still catches a changed gate config."""
+    import re
+
+    from preql_spark.streaming.stream import incremental_curation_ingest
+    src, store, ids, ck = (str(tmp_path / x)
+                           for x in ("src", "store", "ids", "ck"))
+    os.makedirs(ck)
+    for marker in (os.path.join(ck, "__ingest_run_id"),
+                   store + "__gate_fp"):
+        open(marker, "wb").close()
+    d = eng.t.documents.df.select(
+        "doc_id", "source",
+        F.concat(F.substring("text", 1, 50),
+                 F.lit(". keep me fine! another sentence here."))
+        .alias("text")).filter(F.col("doc_id") < 40)
+    d.write.mode("overwrite").parquet(src)
+    kw = dict(gate="c4", ids_path=ids, min_sentences=2)
+    out = incremental_curation_ingest(spark, src, ck, store, **kw)
+    assert sum(r["n_docs"] for r in out.collect()) > 0
+    with open(os.path.join(ck, "__ingest_run_id")) as f:
+        rid = f.read()
+    assert re.fullmatch(r"[0-9a-f]{32}", rid), rid
+    assert {r.run_id for r in spark.read.parquet(ids)
+            .select("run_id").distinct().collect()} == {rid}
+    assert os.path.getsize(store + "__gate_fp") > 0
+    with pytest.raises(ValueError, match="gate-config drift"):
+        incremental_curation_ingest(spark, src, ck, store, gate="c4",
+                                    ids_path=ids, min_sentences=3)
 
 
 def test_curation_ids_sidecar_semantics(spark, eng, tmp_path):

@@ -1,12 +1,24 @@
-"""Generate PLANS.md — a per-headline-query physical-plan audit.
+"""Physical-plan audits, with AQE off so plans are static.
 
-For every bench headline query, extract the scale-relevant plan facts
-(exchange count, broadcast joins, TakeOrderedAndProject, pushed
-filters, whole-stage-codegen subtree count) from
-``explain("formatted")`` so the 100 TB design claims in SCALE.md are
-checkable from one artifact without re-running anything.
+Default: generate PLANS.md — a per-headline-query audit.  For every
+bench headline query, extract the scale-relevant plan facts (exchange
+count, broadcast joins, TakeOrderedAndProject, pushed filters,
+whole-stage-codegen subtree count) from ``explain("formatted")`` so the
+100 TB design claims in SCALE.md are checkable from one artifact
+without re-running anything.
 
-Usage: python tools/plan_audit.py [sf_dir]  (default sf0.001)
+``--all``: a structure audit of EVERY graded query
+(``__spark_entry__.queries()``), one TSV row each: Exchange count,
+join-strategy counts, Sort count, Arrow boundaries, and flags for
+row-at-a-time Python (BatchEvalPython), CartesianProduct and
+BroadcastNestedLoopJoin.  A query whose frame fails to build gets an
+ERROR row and the audit goes on.  Timing-insensitive — this checks
+shapes, so it can run on a busy machine.
+
+Usage:
+    python tools/plan_audit.py [sf_dir]
+    python tools/plan_audit.py --all [sf_dir] [out.tsv]
+(sf_dir defaults to sf0.001, out.tsv to /tmp/plan_audit_full.tsv)
 """
 
 from __future__ import annotations
@@ -14,23 +26,26 @@ from __future__ import annotations
 import os
 import re
 import sys
+import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+def _explain(df, mode: str) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), mode)
 
-    import __spark_entry__ as entry
+
+def _node_counts(plan: str) -> dict:
+    c: dict = {}
+    for k in re.findall(r"\(\d+\) ([A-Za-z]+)", plan):
+        c[k] = c.get(k, 0) + 1
+    return c
+
+
+def headline(spark, qs, sf_dir: str) -> None:
     from bench import BENCH_QUERIES
-    from preql_spark.engine import default_session
-
-    spark = default_session("plan_audit")
-    # static plans for the audit: AQE wraps everything in
-    # AdaptiveSparkPlan, which hides codegen subtrees and defers join
-    # strategy until runtime — the production sessions keep AQE on
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    qs = entry.queries()
 
     lines = [
         "# PLANS — physical-plan audit of the bench headline queries",
@@ -46,18 +61,12 @@ def main():
     ]
     for name in BENCH_QUERIES:
         df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
-        nodes = dict(re.findall(r"\((\d+)\) (\w+)", plan))
-        kinds = list(nodes.values())
-        n_ex = sum(1 for k in kinds if k == "Exchange")
-        n_bhj = sum(1 for k in kinds if k == "BroadcastHashJoin")
-        n_smj = sum(1 for k in kinds if k == "SortMergeJoin")
+        plan = _explain(df, "formatted")
+        c = _node_counts(plan)
         topk = "yes" if "TakeOrderedAndProject" in plan else "—"
         pushed = "yes" if re.search(r"PushedFilters: \[[^\]]", plan) else "—"
-        cg = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "codegen")
-        m = re.search(r"Found (\d+) WholeStageCodegen subtrees", cg)
+        m = re.search(r"Found (\d+) WholeStageCodegen subtrees",
+                      _explain(df, "codegen"))
         ncg = int(m.group(1)) if m else 0
         # distinguish the sanctioned Arrow boundary (MapInPandas —
         # batch-columnar, the model seat) from row-at-a-time Python
@@ -66,7 +75,9 @@ def main():
               else "arrow" if ("MapInPandas" in plan
                                or "ArrowEvalPython" in plan)
               else "—")
-        lines.append(f"| {name} | {n_ex} | {n_bhj} | {n_smj} | {topk} |"
+        lines.append(f"| {name} | {c.get('Exchange', 0)} |"
+                     f" {c.get('BroadcastHashJoin', 0)} |"
+                     f" {c.get('SortMergeJoin', 0)} | {topk} |"
                      f" {pushed} | {ncg} | {py} |")
 
     lines += [
@@ -83,8 +94,7 @@ def main():
         "seat (q221's classifier scorer in the headline set; the "
         "multimodal decode and embed_text outside it).",
     ]
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "PLANS.md")
+    path = os.path.join(ROOT, "PLANS.md")
     # preserve hand-written sections (## headings added between
     # regenerations — e.g. the bench-ratio noise notes): everything
     # from the first '## ' up to the reading guide is carried over
@@ -101,6 +111,62 @@ def main():
     with open(path, "w") as f:
         f.write(out)
     print(out)
+
+
+def every_query(spark, qs, sf_dir: str, out_path: str) -> None:
+    rows = []
+    for name in sorted(qs):
+        try:
+            plan = _explain(qs[name](spark, sf_dir), "formatted")
+        except Exception as e:  # noqa: BLE001 - audit keeps going
+            rows.append((name, "ERROR", type(e).__name__, str(e)[:120]))
+            traceback.print_exc(limit=1)
+            continue
+        c = _node_counts(plan)
+        flags = [f"{label}={c[k]}" for k, label in (
+            ("BatchEvalPython", "BatchEvalPython"),
+            ("CartesianProduct", "CartesianProduct"),
+            ("BroadcastNestedLoopJoin", "BNLJ")) if c.get(k)]
+        arrow = sum(c.get(k, 0) for k in (
+            "ArrowEvalPython", "MapInPandas", "MapInArrow",
+            "FlatMapGroupsInPandas"))
+        rows.append((
+            name,
+            f"ex={c.get('Exchange', 0)}",
+            f"smj={c.get('SortMergeJoin', 0)}"
+            f" bhj={c.get('BroadcastHashJoin', 0)}"
+            f" shj={c.get('ShuffledHashJoin', 0)}"
+            f" sort={c.get('Sort', 0)}"
+            f" arrow={arrow}",
+            ";".join(flags) or "-",
+        ))
+    with open(out_path, "w") as f:
+        for r in rows:
+            f.write("\t".join(str(x) for x in r) + "\n")
+    print(f"wrote {len(rows)} rows to {out_path}")
+
+
+def main():
+    args = sys.argv[1:]
+    full = "--all" in args
+    args = [a for a in args if a != "--all"]
+    sf_dir = args[0] if args else "/root/testdata/sf0.001"
+
+    import __spark_entry__ as entry
+    from preql_spark.engine import default_session
+
+    spark = default_session("plan_audit")
+    # static plans for the audit: AQE wraps everything in
+    # AdaptiveSparkPlan, which hides codegen subtrees and defers join
+    # strategy until runtime — the production sessions keep AQE on
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    qs = entry.queries()
+    if full:
+        every_query(spark, qs, sf_dir,
+                    args[1] if len(args) > 1
+                    else "/tmp/plan_audit_full.tsv")
+    else:
+        headline(spark, qs, sf_dir)
 
 
 if __name__ == "__main__":
